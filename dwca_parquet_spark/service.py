@@ -20,9 +20,11 @@ executor unchanged — the Spark driver is the worker either way, and the
 heavy lifting inside each job is a distributed Spark plan, not driver code.
 
 Jobs:
-- ``job_version_to_parquet`` ⇔ ``libs/parquet.py:20-56``: fetch DwC-A,
-  flatten (star join), write versioned + latest parquet — skipped when the
-  versioned output already exists on the target filesystem.
+- ``job_version_to_parquet`` ⇔ ``libs/parquet.py:20-56``: probe, then
+  fetch. The job first probes the versioned output on the target
+  filesystem (``:33``) and returns None if it exists; only then does it
+  fetch the DwC-A (``:35-42``), flatten (star join) and write versioned +
+  latest parquet. A repeat request costs one metadata probe.
 - ``job_csw``    ⇔ ``libs/csw.py:104-113``: harvest → 21-col record table
   → parquet at ``cfg.csw_path``.
 - ``job_geoapi`` ⇔ ``libs/geoapi.py:68-75``: harvest → pygeoapi configs →
@@ -42,6 +44,7 @@ from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
+from dwca_parquet_spark.fs import FS
 from dwca_parquet_spark.plans.csw import (
     CatalogConfig,
     eml_to_csw_records,
@@ -53,7 +56,11 @@ from dwca_parquet_spark.plans.geoapi import (
     ipt_to_pygeoapi_resources,
 )
 from dwca_parquet_spark.sinks.jsonarray import write_json_array
-from dwca_parquet_spark.sinks.parquet import write_parquet, write_versioned
+from dwca_parquet_spark.sinks.parquet import (
+    versioned_paths,
+    write_parquet,
+    write_versioned,
+)
 from dwca_parquet_spark.sources.dwca import read_dwca
 from dwca_parquet_spark.sources.ipt import IptClient, parse_eml
 
@@ -150,10 +157,20 @@ def job_version_to_parquet(
 ) -> tuple[str, str] | None:
     """DwC-A → flattened occurrence parquet, versioned + latest.
 
-    Reference ``libs/parquet.py:20-56``, with its fixes applied: the plan
-    executes once (write + fs copy, not two executions), and the archive
-    bytes go through the client's injectable fetch (mockable, same staging
-    lifecycle — the cache zip is deleted in ``finally``)."""
+    Reference ``libs/parquet.py:20-56``, in its order: probe, then fetch.
+    The versioned output is probed on the store's filesystem first
+    (``:33``); when it exists the job returns None at once, so a repeat
+    costs one metadata call and no fetch, staging, Spark job or plan. Only
+    a first-seen version fetches and stages the archive (``:35-42``).
+    ``write_versioned`` keeps its own guard, which also covers a version
+    written between the probe and the write. The reference's fixes are
+    applied: the plan executes once (write + fs copy, not two executions),
+    and the archive bytes go through the client's injectable fetch
+    (mockable, same staging lifecycle — the cache zip is deleted in
+    ``finally``)."""
+    versioned, _ = versioned_paths(cfg.resources_base, resource_id, version)
+    if FS(spark, versioned).exists(versioned):
+        return None
     url = f"{cfg.catalog.ipt_url}/archive.do?r={resource_id}&v={version}"
     with tempfile.TemporaryDirectory(dir=cfg.staging_dir) as tmp:
         cache = Path(tmp) / f"{resource_id}-v{version}.zip"
@@ -219,7 +236,9 @@ class ResourceService:
             "ipt_dwca": f"{ipt}/archive.do?r={resource_id}",
             "meta": meta,
             "version": version,
-            "parquet_url": f"{self.cfg.resources_base}/{resource_id}.parquet",
+            "parquet_url": versioned_paths(
+                self.cfg.resources_base, resource_id, version
+            )[1],
             "job_id": job.id,
         }
 

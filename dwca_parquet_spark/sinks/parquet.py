@@ -70,6 +70,16 @@ def write_parquet(
     return path
 
 
+def versioned_paths(
+    base_dir: str | Path, dataset_id: str, version: str | int
+) -> tuple[str, str]:
+    """``(versioned, latest)`` paths of one dataset version: the reference's
+    scheme (``libs/parquet.py:24-29``), ``{base}/{id}/v{ver}.parquet`` plus
+    the mutable ``{base}/{id}.parquet`` alias."""
+    base = str(base_dir).rstrip("/")
+    return f"{base}/{dataset_id}/v{version}.parquet", f"{base}/{dataset_id}.parquet"
+
+
 def write_versioned(
     df: DataFrame,
     base_dir: str | Path,
@@ -79,16 +89,14 @@ def write_versioned(
 ) -> tuple[str, str] | None:
     """Versioned + latest outputs, computing the plan ONCE.
 
-    Mirrors the reference's path scheme (``libs/parquet.py:24-29``) and its
+    Mirrors the reference's path scheme (:func:`versioned_paths`) and its
     idempotency guard (``:33``: skip when the versioned output exists;
     returns None in that case), but replaces the double execution
     (``:48-51``) with write-once + filesystem-side copy. The existence
     probe runs on the path's own filesystem (S3 object probe on a real
     deployment), matching the reference's fsspec ``exists`` semantics.
     """
-    base = str(base_dir).rstrip("/")
-    versioned = f"{base}/{dataset_id}/v{version}.parquet"
-    latest = f"{base}/{dataset_id}.parquet"
+    versioned, latest = versioned_paths(base_dir, dataset_id, version)
     fs = FS(df.sparkSession, versioned)
     if fs.exists(versioned):
         return None

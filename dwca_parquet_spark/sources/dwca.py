@@ -31,10 +31,13 @@ import os
 import shutil
 import urllib.request
 import zipfile
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
+from typing import Callable
 from xml.etree import ElementTree
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 _DWC_NS = "{http://rs.tdwg.org/dwc/text/}"
@@ -222,15 +225,43 @@ def read_dwca(
 ) -> tuple[DwcaArchive, DataFrame, list[DataFrame]]:
     """Full archive → (descriptor, core DataFrame, extension DataFrames).
 
+    Layers are read concurrently, one pool thread per layer in the archive
+    (so no pool-size setting): with ``infer_schema`` Spark's CSV reader
+    runs two jobs per layer before it returns (a header ``take(1)`` and
+    the full-sample inference pass), and the layers are independent, so
+    their jobs share the cluster instead of queueing one layer after
+    another. Each thread target is wrapped with
+    ``inheritable_thread_target(spark)``: a pool thread is a fresh JVM
+    thread, and without the wrap the caller's local properties (job group,
+    scheduler pool) and job tags would not reach the inference jobs, so
+    cancelling the caller's job group would not stop them. The session is
+    passed so tags are inherited too. Results keep the serial order: core
+    first, then extensions in meta.xml order.
+
     ``honor_ignore_header_lines`` — see :func:`read_layer`; default False
     preserves the reference's verbatim one-header-line behavior."""
     extract_dir = stage_archive(source, staging_dir)
     archive = parse_meta(extract_dir)
-    core_df = read_layer(
-        spark, archive, archive.core, infer_schema, honor_ignore_header_lines
-    )
-    ext_dfs = [
-        read_layer(spark, archive, ext, infer_schema, honor_ignore_header_lines)
-        for ext in archive.extensions
-    ]
+    layers = [archive.core, *archive.extensions]
+    with ThreadPoolExecutor(max_workers=len(layers)) as pool:
+        # one wrap per layer: a wrap clones the caller's local properties
+        # once, and threads given the same clone would overwrite each
+        # other's per-query properties (e.g. spark.sql.execution.id)
+        futures = [
+            pool.submit(
+                _inheriting(spark, read_layer),
+                spark, archive, layer, infer_schema, honor_ignore_header_lines,
+            )
+            for layer in layers
+        ]
+        core_df, *ext_dfs = [f.result() for f in futures]
     return archive, core_df, ext_dfs
+
+
+def _inheriting(spark: SparkSession, fn: Callable) -> Callable:
+    """``fn`` wrapped to run with the calling thread's Spark local
+    properties and job tags (captured now, applied in the thread)."""
+    wrap = inheritable_thread_target(spark)
+    # without pinned threads (PYSPARK_PIN_THREAD=false) PySpark has no
+    # per-thread properties to carry and hands the session back as is
+    return fn if wrap is spark else wrap(fn)

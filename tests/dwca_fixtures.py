@@ -167,3 +167,17 @@ def multimedia_extension(core_ids: list[int]) -> dict:
             for cid in core_ids
         ],
     }
+
+
+def in_job_group(spark, group: str, fn):
+    """Run ``fn`` under Spark job group ``group``; return its result and the
+    group's job ids (the Spark jobs the call made, pool threads included)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))

@@ -21,7 +21,7 @@ import duckdb
 import pytest
 
 from dwca_parquet_spark.plans.flatten import dwca_flatten
-from dwca_parquet_spark.sources.dwca import read_dwca
+from dwca_parquet_spark.sources.dwca import read_dwca, read_layer
 from tests import dwca_fixtures as FX
 
 
@@ -197,6 +197,41 @@ def test_colliding_columns_renamed(spark, tmp_path):
     out = tmp_path / "out.parquet"
     flat.write.mode("overwrite").parquet(str(out))
     assert spark.read.parquet(str(out)).count() == 6
+
+
+def test_read_dwca_concurrent_inference_parity(spark, tmp_path):
+    """Layers inferred on pool threads get the same schemas, in the same
+    order, as serial ``read_layer`` calls; their Spark jobs run under the
+    caller's job group (pool threads inherit its local properties)."""
+    rows = FX.core_rows()
+    rows[0]["scientificName"] = "Ærø señor"
+    collide = {
+        "file": "multimedia.txt",
+        "headers": ["coreid", "scientificName", "individualCount"],
+        "rows": [
+            {"coreid": i, "scientificName": f"ext-{i}", "individualCount": f"{i}.5"}
+            for i in range(1, 7)
+        ],
+        "sep": "\t",
+        "enc": "ISO-8859-1",
+    }
+    mof = FX.mof_extension([r["id"] for r in rows], per_id=2)
+    z = FX.build_archive(
+        tmp_path, "v_par", rows, FX.CORE_HEADERS,
+        extensions=[mof, collide], core_sep="\t", core_enc="ISO-8859-1",
+    )
+    (archive, core_df, ext_dfs), jobs = FX.in_job_group(
+        spark, "dwca-concurrent-inference",
+        lambda: read_dwca(spark, z, tmp_path / "staging"),
+    )
+    layers = [archive.core, *archive.extensions]
+    aliases = [ly.alias for ly in layers]
+    assert aliases == ["occurrence", "measurementorfact", "multimedia"]
+    serial = [read_layer(spark, archive, ly) for ly in layers]
+    assert [df.dtypes for df in [core_df, *ext_dfs]] == [df.dtypes for df in serial]
+    assert dict(ext_dfs[1].dtypes)["individualCount"] == "double"
+    assert len(jobs) >= 2 * len(layers)  # header take(1) + inference, per layer
+    assert core_df.filter("scientificName = 'Ærø señor'").count() == 1
 
 
 def test_null_latlon_geom_null(spark, tmp_path):

@@ -20,29 +20,47 @@ from tests import dwca_fixtures as FX
 from tests.test_catalog import EML, RSS
 
 
-@pytest.fixture()
-def svc(spark, tmp_path):
-    zips = {}
-    for rid in ("birds", "moths"):
-        (tmp_path / rid).mkdir()
-        zips[rid] = FX.build_archive(
-            tmp_path / rid, rid, FX.core_rows(), FX.CORE_HEADERS
-        )
+def _fetcher(zips: dict, archive_urls: list[str], archives_fail: bool = False):
+    """Mock IPT fetch; records every archive URL it is asked for."""
 
     def fetch(url: str) -> bytes:
         if url.endswith("/rss"):
             return RSS
         if "archive.do" in url:
+            archive_urls.append(url)
+            if archives_fail:
+                raise ConnectionError(f"archive fetch refused: {url}")
             rid = url.split("r=")[-1].split("&")[0]
             return Path(zips[rid]).read_bytes()
         rid = url.split("r=")[-1]
         return EML[rid]
 
+    return fetch
+
+
+@pytest.fixture()
+def zips(tmp_path):
+    out = {}
+    for rid in ("birds", "moths"):
+        (tmp_path / rid).mkdir()
+        out[rid] = FX.build_archive(
+            tmp_path / rid, rid, FX.core_rows(), FX.CORE_HEADERS
+        )
+    return out
+
+
+@pytest.fixture()
+def archive_urls():
+    return []
+
+
+@pytest.fixture()
+def svc(spark, tmp_path, zips, archive_urls):
     cfg = ServiceConfig(
         catalog=CatalogConfig(ipt_url="https://ipt.test.org"),
         store=str(tmp_path / "store"),
     )
-    client = IptClient("https://ipt.test.org", fetch=fetch)
+    client = IptClient("https://ipt.test.org", fetch=_fetcher(zips, archive_urls))
     return ResourceService(spark, client, cfg, jobs=JobQueue(inline=True))
 
 
@@ -71,6 +89,61 @@ def test_get_resource_converts(svc, spark, tmp_path):
     svc.get_resource("birds")
     job2 = svc.jobs.jobs[-1].wait(120)
     assert job2.status == "done" and job2.result is None
+
+
+def test_repeat_skips_before_fetch(svc, spark, archive_urls):
+    """A repeat of a converted version probes the store and stops there:
+    no archive fetch, no Spark job, output files untouched."""
+    _, first = FX.in_job_group(
+        spark, "first-conversion", lambda: svc.get_resource("birds")
+    )
+    job = svc.jobs.jobs[-1].wait(120)
+    assert job.status == "done", job.error
+    assert first, "the job-group count must see a conversion's Spark jobs"
+    assert len(archive_urls) == 1
+    versioned, _ = job.result
+    before = Path(versioned).stat()
+
+    _, repeat = FX.in_job_group(
+        spark, "repeat-conversion", lambda: svc.get_resource("birds")
+    )
+    job2 = svc.jobs.jobs[-1].wait(120)
+    assert job2.status == "done", job2.error
+    assert job2.result is None
+    assert len(archive_urls) == 1  # no fetch on the repeat
+    assert repeat == []  # no Spark job on the repeat
+    after = Path(versioned).stat()
+    assert (after.st_mtime_ns, after.st_size) == (before.st_mtime_ns, before.st_size)
+
+
+def test_probe_runs_before_fetch(svc, spark, zips):
+    """Reference ordering (``libs/parquet.py:33`` before ``:35-42``): with
+    an IPT whose archive fetch fails, a repeat of a converted version still
+    succeeds with None, while a first-seen version fails."""
+    svc.get_resource("birds")
+    job = svc.jobs.jobs[-1].wait(120)
+    assert job.status == "done", job.error
+
+    refused: list[str] = []
+    broken = ResourceService(
+        spark,
+        IptClient(
+            "https://ipt.test.org",
+            fetch=_fetcher(zips, refused, archives_fail=True),
+        ),
+        svc.cfg,
+        jobs=JobQueue(inline=True),
+    )
+    broken.get_resource("birds")
+    repeat = broken.jobs.jobs[-1].wait(120)
+    assert repeat.status == "done", repeat.error
+    assert repeat.result is None and refused == []
+
+    broken.get_resource("moths")
+    first_seen = broken.jobs.jobs[-1].wait(120)
+    assert first_seen.status == "failed"
+    assert "archive fetch refused" in first_seen.error
+    assert len(refused) == 1
 
 
 def test_generate_csw_and_geoapi(svc, spark, tmp_path):
