@@ -465,8 +465,8 @@ def r5_tier_specs():
         # the whole 0.17 s oracle, so the ratio measured the fixture
         # floor, not the plan (and a repartition(32) measured WORSE —
         # SCALE.md round 9). Both engines replicate documents
-        # _HH_R-fold (R=16 per the round-9 R-sweep,
-        # tools/group_hh_bench_scale.py: R=8 → floor 0.51 s vs oracle
+        # _HH_R-fold (R=16 per the round-9 R-sweep in
+        # SCALE.md: R=8 → floor 0.51 s vs oracle
         # 1.46 s, ratio 1.55×; R=16 → 1.02× — ~43M (group, item)
         # pairs, past the point where scan cost < oracle time; the
         # r8-AUC re-scale precedent). Counts scale by R uniformly, so

@@ -21,12 +21,22 @@ Design notes for 100 TB:
 - ``copy`` for the versioned→latest alias uses Hadoop ``FileUtil.copy``,
   which is a stream copy on the cluster-side filesystem — never through the
   driver's disk.
+
+It also owns the one versioned-state format every incremental fold uses
+(streaming states, graph totals, PageRank): the newest complete ``v<N>``
+directory under a base IS the state and its watermark; a write goes to
+``v<N>.tmp`` and renames into place, so a crashed write is never read as
+state; older versions are pruned only after the commit. Spark's
+micro-batch ids grow monotonically per checkpoint, so one watermark (not a
+set) tells a replayed batch (id <= watermark: a no-op before any read or
+merge — re-merging an additive partial would double-count) from a new one.
 """
 
 from __future__ import annotations
 
+import re
 from pathlib import Path
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Callable
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import SparkSession
@@ -136,3 +146,83 @@ def to_local(path: str | Path) -> Path | None:
             rest = rest[1:]
         return Path(rest)
     return None
+
+
+def commit_single_file(
+    spark: "SparkSession", path: str | Path, write: Callable[[str], None]
+) -> str:
+    """Commit one file at ``path``: ``write(tmp)`` must leave exactly one
+    ``part-*`` file in the ``tmp`` directory (a ``coalesce(1)`` write); it
+    replaces any previous file at ``path`` by rename."""
+    path = str(path)
+    fs = FS(spark, path)
+    tmp = path + ".tmp.dir"
+    write(tmp)
+    parts = [p for p in fs.glob(tmp + "/part-*") if not p.endswith(".crc")]
+    if len(parts) != 1:
+        raise IOError(f"expected one part file in {tmp}, found {parts}")
+    fs.mkdirs(parent(path))
+    if fs.exists(path):
+        fs.delete(path)
+    fs.rename(parts[0], path)
+    fs.delete(tmp)
+    return path
+
+
+def _numbered(fs: FS, base: str, prefix: str) -> list[tuple[int, str]]:
+    """``(n, path)`` for every ``{base}/{prefix}<n>`` entry, in path order;
+    ``.tmp`` residue and other names are ignored."""
+    rx = re.compile(rf"/{prefix}(\d+)$")
+    return [
+        (int(m.group(1)), p)
+        for p in fs.glob(f"{base}/{prefix}*")
+        if (m := rx.search(p))
+    ]
+
+
+def latest_version(spark: "SparkSession", base: str | Path) -> int:
+    """The newest complete version ``N`` of ``{base}/v<N>`` — the state's
+    watermark; -1 when there is none (or no ``base``)."""
+    base = str(base).rstrip("/")
+    versions = _numbered(FS(spark, base), base, "v")
+    return max((n for n, _ in versions), default=-1)
+
+
+def commit_version(
+    spark: "SparkSession",
+    base: str | Path,
+    version: int,
+    write: Callable[[str], None],
+    keep: int | None,
+) -> None:
+    """Commit ``{base}/v<version>``: drop a crashed attempt's ``.tmp``,
+    ``write(tmp)``, rename into place (the commit point), then prune
+    versions ``<= version - keep`` (``keep=None`` keeps every version).
+    ``version`` must be above the current watermark."""
+    base = str(base).rstrip("/")
+    fs = FS(spark, base)
+    tmp, final = f"{base}/v{version}.tmp", f"{base}/v{version}"
+    if fs.exists(tmp):
+        fs.delete(tmp)
+    write(tmp)
+    fs.rename(tmp, final)
+    if keep is not None:
+        for n, p in _numbered(fs, base, "v"):
+            if n <= version - keep:
+                fs.delete(p)
+
+
+def split_segments(
+    spark: "SparkSession", base: str | Path, watermark: int
+) -> tuple[list[str], list[str]]:
+    """``(committed, orphans)`` among the ``{base}/seg<N>`` directories of an
+    append-only segment log whose commit point is a versioned totals
+    file: ``N <= watermark`` is committed; above it is a crashed append's
+    segment, written before its totals rename, which must never be read
+    as state."""
+    base = str(base).rstrip("/")
+    committed: list[str] = []
+    orphans: list[str] = []
+    for n, p in _numbered(FS(spark, base), base, "seg"):
+        (committed if n <= watermark else orphans).append(p)
+    return committed, orphans

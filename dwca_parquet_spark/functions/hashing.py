@@ -143,48 +143,6 @@ def shingle_hashes(col: Column, k: int = 3) -> Column:
     return shingle_hashes_from_codes(char_codes(col), k)
 
 
-def minhash_signature(hashes: Column, num_hashes: int = MINHASH_K) -> Column:
-    """MinHash signature: for each permutation j, min((A_j*h + B_j) % P)."""
-    def perm(a: int, b: int):
-        return lambda h: (h * a + b) % MINHASH_P
-
-    sig = []
-    for j in range(num_hashes):
-        a, b = _minhash_ab(j)
-        sig.append(F.array_min(F.transform(hashes, perm(a, b))))
-    return F.array(*sig)
-
-
-def band_buckets(sig: Column) -> Column:
-    """Fold each band of the signature into one bucket id (array of BANDS)."""
-    buckets = []
-    for band in range(MINHASH_BANDS):
-        lo = band * MINHASH_ROWS_PER_BAND
-        expr = F.lit(0).cast("long")
-        for r in range(lo, lo + MINHASH_ROWS_PER_BAND):
-            expr = (expr * HASH_BASE + F.element_at(sig, r + 1)) % HASH_MOD
-        buckets.append(expr)
-    return F.array(*buckets)
-
-
-def simhash32(token_hashes: Column) -> Column:
-    """32-bit SimHash from an array of token hashes.
-
-    bit_i(fingerprint) = 1 iff sum over tokens of (+1 if bit_i(h) else -1) > 0.
-    Expressed as 32 aggregate folds — all integer built-ins, no UDF.
-    """
-    def bit_vote(i: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-        ).otherwise(F.lit(-1))
-
-    fp = F.lit(0).cast("long")
-    for i in range(32):
-        bit_sum = F.aggregate(token_hashes, F.lit(0).cast("long"), bit_vote(i))
-        fp = fp + F.when(bit_sum > 0, F.lit(2**i).cast("long")).otherwise(F.lit(0))
-    return fp
-
-
 # ---------------------------------------------------------------------------
 # DuckDB SQL-text builders (the oracle side; same constants, same arithmetic)
 # ---------------------------------------------------------------------------
@@ -246,35 +204,3 @@ def sql_shingle_hashes(expr: str, k: int = 3) -> str:
         f"[{ph} for s in "
         f"[substr({expr}, i, {k}) for i in range(1, length({expr}) - {k - 1} + 1)]]) END)"
     )
-
-
-def sql_minhash_signature(hashes_expr: str, num_hashes: int = MINHASH_K) -> str:
-    parts = []
-    for j in range(num_hashes):
-        a, b = _minhash_ab(j)
-        parts.append(
-            f"list_min([(h * {a} + {b}) % {MINHASH_P} for h in {hashes_expr}])"
-        )
-    return "[" + ", ".join(parts) + "]"
-
-
-def sql_band_buckets(sig_expr: str) -> str:
-    buckets = []
-    for band in range(MINHASH_BANDS):
-        lo = band * MINHASH_ROWS_PER_BAND
-        expr = "0"
-        for r in range(lo, lo + MINHASH_ROWS_PER_BAND):
-            expr = f"(({expr}) * {HASH_BASE} + {sig_expr}[{r + 1}]) % {HASH_MOD}"
-        buckets.append(expr)
-    return "[" + ", ".join(buckets) + "]"
-
-
-def sql_simhash32(token_hashes_expr: str) -> str:
-    terms = []
-    for i in range(32):
-        bit_sum = (
-            f"list_reduce(list_prepend(0, [CASE WHEN (h // {2**i}) % 2 = 1 THEN 1 "
-            f"ELSE -1 END for h in {token_hashes_expr}]), (a, b) -> a + b)"
-        )
-        terms.append(f"(CASE WHEN {bit_sum} > 0 THEN {2**i} ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"

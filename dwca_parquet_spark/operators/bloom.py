@@ -39,8 +39,8 @@ Scale/shuffle shape:
   broadcast stops being free — at that point shard the filter (one bloom
   per corpus partition, probed against the batch partition that would own
   the key — the bitmap table is already keyed data, so sharding is a
-  WHERE clause) rather than growing one monolith. tools/bloom_sweep.py
-  measures the tradeoff curve.
+  WHERE clause) rather than growing one monolith. SCALE.md records the
+  tradeoff curve.
 - verify: anti-join on the candidate subset only (|batch| · fpp + true-dup
   rows), keyed on the 8-byte hash — the full-history join the filter
   avoided now touches only candidates.

@@ -219,8 +219,8 @@ def pair_jaccard(
     dominant exchange, a single-long hash/compare on the hot key, and
     a probe side narrow enough that AQE's runtime size measurement can
     elect a broadcast it refuses for the two-column equivalent.
-    Measured on the sf0.3 generated fixture (tools/
-    q30_stream_experiment.py): 84.7 → 12.6 s with bit-identical output
+    Measured on the sf0.3 generated fixture (SCALE.md, q30
+    verify-stream experiment): 84.7 → 12.6 s with bit-identical output
     checksums; the int32-hash lever measured FLAT (87 s) because
     UnsafeRow gives fixed-width fields 8-byte slots regardless.
     Ids outside the packable domain (strings, negatives, > 2^33) fall

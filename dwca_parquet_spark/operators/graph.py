@@ -32,6 +32,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dwca_parquet_spark.cache import persist_tracked
+from dwca_parquet_spark.fs import (
+    FS,
+    commit_version,
+    latest_version,
+    split_segments,
+)
 
 # decimal(28,12), NOT (38,12): Spark derives division/multiplication
 # result types from operand precisions and SHRINKS the scale when the
@@ -368,7 +374,7 @@ def triangle_count(
 # t1 join touches only the <= 2·|ΔE| adjacency rows of batch endpoints,
 # t2/t3 see only ΔE. append(state, B) ≡ triangle_count(A ∪ B) is pinned
 # exactly (tests/test_triangles_incremental.py); the planted-hub append
-# sweep is tools/triangle_incr_sweep.py → SCALE.md.
+# sweep is recorded in SCALE.md.
 
 
 def _canon_edges(edges: DataFrame) -> DataFrame:
@@ -390,82 +396,57 @@ def _both_dirs(e: DataFrame) -> DataFrame:
     )
 
 
-_TRI_TOTALS_RE = None  # set lazily (re import kept local)
+_TRI_TOTALS = ("n_edges", "n_wedges", "n_triangles")
 
 
-def _tri_watermark(spark, path: str) -> tuple[int, dict | None]:
-    """(watermark, totals) from the newest totals version; (-1, None) on
-    an empty state dir."""
-    import re
-
-    from dwca_parquet_spark.fs import FS
-
-    fs = FS(spark, path)
-    best = -1
-    for p in fs.glob(f"{path}/totals/v*"):
-        m = re.search(r"/v(\d+)$", p)
-        if m:
-            best = max(best, int(m.group(1)))
-    if best < 0:
+def _read_totals(
+    spark, path: str, fields: tuple[str, ...]
+) -> tuple[int, dict | None]:
+    """(watermark, totals) from the newest ``totals/v<N>`` of a segment
+    state (op 154 / op 161); (-1, None) on an empty state dir."""
+    wm = latest_version(spark, f"{path}/totals")
+    if wm < 0:
         return -1, None
-    row = spark.read.parquet(f"{path}/totals/v{best}").first()
-    return best, {
-        "n_edges": row["n_edges"],
-        "n_wedges": row["n_wedges"],
-        "n_triangles": row["n_triangles"],
-    }
+    row = spark.read.parquet(f"{path}/totals/v{wm}").first()
+    return wm, {f: int(row[f]) for f in fields}
 
 
-def _tri_segments(fs, path: str, wm: int) -> tuple[list[str], list[str]]:
-    """Partition segment dirs into (committed, orphan) by the totals
-    watermark. A segment with version > wm is a crashed append's
-    leftover: op-154's commit protocol writes the segment BEFORE the
-    totals rename, so a crash between the two leaves an orphan that
-    MUST NOT be read as old edges — the retry would see its own batch
-    as already-present, compute an empty delta, and commit unchanged
-    totals while the orphan keeps poisoning every later append
-    (ADVICE r10 #1; regression-pinned in
-    tests/test_triangles_incremental.py)."""
-    import re
-
-    committed: list[str] = []
-    orphans: list[str] = []
-    for p in fs.glob(f"{path}/segments/seg*"):
-        m = re.search(r"/seg(\d+)$", p)
-        if not m:
-            continue
-        (committed if int(m.group(1)) <= wm else orphans).append(p)
-    return committed, orphans
-
-
-def _tri_write_state(
-    spark, path: str, version: int, seg: DataFrame | None, totals: dict
+def _write_state(
+    spark,
+    path: str,
+    version: int,
+    segs: dict[str, DataFrame | None],
+    totals: dict,
+    fields: tuple[str, ...],
 ) -> None:
-    """Commit protocol: segment first (overwrite-safe — a crashed earlier
-    attempt at the same version left no totals, so rewriting it is
-    idempotent), then totals via tmp+rename as the commit point."""
-    from dwca_parquet_spark.fs import FS
+    """Commit protocol: segments first (overwrite-safe — a crashed
+    earlier attempt at the same version left no totals, so rewriting is
+    idempotent), then ``totals/v<version>`` via commit_version as the
+    commit point. Every totals version is kept.
 
+    A segment above the totals watermark is therefore a crashed
+    append's leftover (``split_segments`` orphans): it MUST NOT be read
+    as old edges — the retry would see its own batch as already-present,
+    compute an empty delta, and commit unchanged totals while the orphan
+    keeps poisoning every later append (ADVICE r10 #1; regression-pinned
+    in tests/test_triangles_incremental.py)."""
     fs = FS(spark, path)
-    if seg is not None:
-        segp = f"{path}/segments/seg{version}"
-        if fs.exists(segp):
-            fs.delete(segp)
-        seg.write.parquet(segp)
-    tmp, final = f"{path}/totals/v{version}.tmp", f"{path}/totals/v{version}"
-    if fs.exists(tmp):
-        fs.delete(tmp)
-    spark.createDataFrame(
-        [
-            (
-                int(totals["n_edges"]),
-                int(totals["n_wedges"]),
-                int(totals["n_triangles"]),
-            )
-        ],
-        "n_edges long, n_wedges long, n_triangles long",
-    ).coalesce(1).write.parquet(tmp)
-    fs.rename(tmp, final)
+    for sub, df in segs.items():
+        if df is None:
+            continue
+        p = f"{path}/{sub}/seg{version}"
+        if fs.exists(p):
+            fs.delete(p)
+        df.write.parquet(p)
+    row = spark.createDataFrame(
+        [tuple(int(totals[f]) for f in fields)],
+        ", ".join(f"{f} long" for f in fields),
+    )
+    commit_version(
+        spark, f"{path}/totals", version,
+        lambda tmp: row.coalesce(1).write.parquet(tmp),
+        keep=None,
+    )
 
 
 def triangle_state_build(edges: DataFrame, path: str) -> dict:
@@ -473,8 +454,6 @@ def triangle_state_build(edges: DataFrame, path: str) -> dict:
     op-142 totals as totals/v0. Overwrites any previous state at
     ``path``; growth goes through :func:`triangle_state_append`."""
     spark = edges.sparkSession
-    from dwca_parquet_spark.fs import FS
-
     fs = FS(spark, path)
     for sub in ("segments", "totals"):
         if fs.exists(f"{path}/{sub}"):
@@ -486,7 +465,7 @@ def triangle_state_build(edges: DataFrame, path: str) -> dict:
         "n_wedges": row["n_wedges"] or 0,  # sum over empty frame is NULL
         "n_triangles": row["n_triangles"] or 0,
     }
-    _tri_write_state(spark, path, 0, e, totals)
+    _write_state(spark, path, 0, {"segments": e}, totals, _TRI_TOTALS)
     return totals
 
 
@@ -518,15 +497,13 @@ def triangle_state_append(
     touched node's old degree exceeds it, and the caller should fall
     back to triangle_state_build (whose census never builds per-node
     adjacency beyond the O(sqrt(m))-bounded oriented lists)."""
-    wm, totals = _tri_watermark(spark, path)
+    wm, totals = _read_totals(spark, path, _TRI_TOTALS)
     if totals is None:
         raise ValueError(f"no triangle state at {path!r} — build first")
     if batch_id <= wm:
         return False
-    from dwca_parquet_spark.fs import FS
-
+    committed, orphans = split_segments(spark, f"{path}/segments", wm)
     fs = FS(spark, path)
-    committed, orphans = _tri_segments(fs, path, wm)
     for p in orphans:
         fs.delete(p)
     if not committed:
@@ -537,7 +514,7 @@ def triangle_state_append(
     # endpoint semi-filters keep every old-edge pass MAP-SIDE over the
     # segment scan — the old graph is never shuffled, never cached, and
     # never gets a graph-wide adjacency (the first cut did all three
-    # and measured as slow as the recount; tools/triangle_incr_sweep.py)
+    # and measured as slow as the recount; SCALE.md)
     endpoints = (
         cb.select(F.col("u").alias("n"))
         .unionAll(cb.select(F.col("v").alias("n")))
@@ -562,7 +539,7 @@ def triangle_state_append(
     n_new = delta.count()
     if n_new == 0:
         out = dict(totals)
-        _tri_write_state(spark, path, batch_id, None, out)
+        _write_state(spark, path, batch_id, {}, out, _TRI_TOTALS)
         return out
     # Hub guard FIRST, as a plain count aggregate over the touched-node
     # edge stream — never via size(collect_list): the guard exists for
@@ -677,7 +654,9 @@ def triangle_state_append(
         "n_wedges": totals["n_wedges"] + dw,
         "n_triangles": totals["n_triangles"] + t1 + t2 + t3,
     }
-    _tri_write_state(spark, path, batch_id, delta, out)
+    _write_state(
+        spark, path, batch_id, {"segments": delta}, out, _TRI_TOTALS
+    )
     return out
 
 
@@ -685,7 +664,7 @@ def triangle_state_report(spark, path: str) -> DataFrame:
     """The op-142 result row from stored totals — global_clustering via
     the IDENTICAL Spark expression as triangle_count, so
     report(state) ≡ triangle_count(all edges) column-for-column."""
-    wm, totals = _tri_watermark(spark, path)
+    _, totals = _read_totals(spark, path, _TRI_TOTALS)
     if totals is None:
         raise ValueError(f"no triangle state at {path!r} — build first")
     base = spark.createDataFrame(
@@ -730,43 +709,24 @@ def triangle_state_report(spark, path: str) -> DataFrame:
 def _pagerank_state_write(
     spark, path: str, iters: int, damping: str, ranks: DataFrame
 ) -> None:
-    """One complete state version under v{iters} via tmp + atomic
-    rename — the repo's transactional discipline: a crash anywhere
-    leaves the previous complete version untouched (the max complete
-    v-dir IS the state; earlier versions prune only after commit)."""
-    import re
-
-    from dwca_parquet_spark.fs import FS
-
-    fs = FS(spark, path)
-    tmp, final = f"{path}/v{iters}.tmp", f"{path}/v{iters}"
-    if fs.exists(tmp):
-        fs.delete(tmp)
-    ranks.write.parquet(f"{tmp}/ranks.parquet")
-    spark.createDataFrame(
+    """One complete state version ``v{iters}`` via commit_version: a
+    crash anywhere leaves the previous complete version untouched (the
+    newest complete v-dir IS the state; only it is kept, pruned after
+    the commit). ``iters`` is always above the stored version."""
+    meta = spark.createDataFrame(
         [(int(iters), str(damping))], "iters long, damping string"
-    ).coalesce(1).write.parquet(f"{tmp}/meta.parquet")
-    if fs.exists(final):
-        fs.delete(final)
-    fs.rename(tmp, final)
-    for p in fs.glob(f"{path}/v*"):
-        m = re.search(r"/v(\d+)$", p)
-        if m and int(m.group(1)) < iters:
-            fs.delete(p)
+    )
+
+    def write(tmp: str) -> None:
+        ranks.write.parquet(f"{tmp}/ranks.parquet")
+        meta.coalesce(1).write.parquet(f"{tmp}/meta.parquet")
+
+    commit_version(spark, path, iters, write, keep=1)
 
 
 def _pagerank_state_read(spark, path: str):
     """(iters, damping, ranks) from the newest complete version."""
-    import re
-
-    from dwca_parquet_spark.fs import FS
-
-    fs = FS(spark, path)
-    best = -1
-    for p in fs.glob(f"{path}/v*"):
-        m = re.search(r"/v(\d+)$", p)
-        if m:
-            best = max(best, int(m.group(1)))
+    best = latest_version(spark, path)
     if best < 0:
         raise ValueError(f"no pagerank state at {path!r} — save first")
     meta = spark.read.parquet(f"{path}/v{best}/meta.parquet").first()
@@ -786,8 +746,6 @@ def pagerank_state_save(
     (overwrites any previous run's versions; growth-in-precision goes
     through :func:`pagerank_continue`)."""
     spark = edges.sparkSession
-    from dwca_parquet_spark.fs import FS
-
     fs = FS(spark, path)
     if fs.exists(path):
         fs.delete(path)
@@ -807,7 +765,11 @@ def pagerank_continue(
     committed by tmp + atomic rename — a crash ANYWHERE mid-continue
     leaves the previous complete version as the state, which the first
     cut's delete-then-rename pair did not guarantee). Damping comes
-    from the state — the run's constant, not an argument."""
+    from the state — the run's constant, not an argument.
+    ``more_iters`` must be >= 1: 0 would overwrite the only version in
+    place, and a negative count would commit below the watermark."""
+    if more_iters < 1:
+        raise ValueError(f"more_iters must be >= 1, got {more_iters}")
     spark = edges.sparkSession
     done, damping, ranks = _pagerank_state_read(spark, path)
     nodes = (
@@ -954,84 +916,14 @@ def kcore_reference(
 # reads that delete crash orphans (the ADVICE-r10 lesson baked in from
 # the start). kcore_state_append(state, B) ≡ kcore(A ∪ B) is pinned
 # across batch shapes (tests/test_kcore_incremental.py); the planted-
-# cascade sweep is tools/kcore_incr_sweep.py → SCALE.md.
+# cascade sweep is recorded in SCALE.md.
 # Degenerate regimes (documented, not silently slow): a batch whose
 # candidate region approaches graph scale (e.g. closing a cycle that
 # swallows the whole graph) makes the region broadcasts graph-sized —
 # that regime is a rebuild, exactly like op-154's graph-scale batch.
 
 
-def _kcore_watermark(spark, path: str) -> tuple[int, dict | None]:
-    import re
-
-    from dwca_parquet_spark.fs import FS
-
-    fs = FS(spark, path)
-    best = -1
-    for p in fs.glob(f"{path}/totals/v*"):
-        m = re.search(r"/v(\d+)$", p)
-        if m:
-            best = max(best, int(m.group(1)))
-    if best < 0:
-        return -1, None
-    row = spark.read.parquet(f"{path}/totals/v{best}").first()
-    return best, {
-        "k": int(row["k"]),
-        "n_edges": int(row["n_edges"]),
-        "n_core_edges": int(row["n_core_edges"]),
-        "n_core_nodes": int(row["n_core_nodes"]),
-    }
-
-
-def _kcore_segs(fs, path: str, sub: str, wm: int) -> tuple[list, list]:
-    """(committed, orphan) segment dirs under ``sub`` by version vs the
-    totals watermark (the op-154 crash-recovery rule)."""
-    import re
-
-    committed, orphans = [], []
-    for p in fs.glob(f"{path}/{sub}/seg*"):
-        m = re.search(r"/seg(\d+)$", p)
-        if not m:
-            continue
-        (committed if int(m.group(1)) <= wm else orphans).append(p)
-    return committed, orphans
-
-
-def _kcore_write_state(
-    spark,
-    path: str,
-    version: int,
-    seg: DataFrame | None,
-    core_seg: DataFrame | None,
-    totals: dict,
-) -> None:
-    """Segments first (idempotent overwrite — no totals yet references
-    them), then totals via tmp + atomic rename as the commit point."""
-    from dwca_parquet_spark.fs import FS
-
-    fs = FS(spark, path)
-    for sub, df in (("segments", seg), ("core", core_seg)):
-        if df is None:
-            continue
-        p = f"{path}/{sub}/seg{version}"
-        if fs.exists(p):
-            fs.delete(p)
-        df.write.parquet(p)
-    tmp, final = f"{path}/totals/v{version}.tmp", f"{path}/totals/v{version}"
-    if fs.exists(tmp):
-        fs.delete(tmp)
-    spark.createDataFrame(
-        [
-            (
-                int(totals["k"]),
-                int(totals["n_edges"]),
-                int(totals["n_core_edges"]),
-                int(totals["n_core_nodes"]),
-            )
-        ],
-        "k long, n_edges long, n_core_edges long, n_core_nodes long",
-    ).coalesce(1).write.parquet(tmp)
-    fs.rename(tmp, final)
+_KCORE_TOTALS = ("k", "n_edges", "n_core_edges", "n_core_nodes")
 
 
 def kcore_state_build(edges: DataFrame, path: str, k: int) -> dict:
@@ -1042,8 +934,6 @@ def kcore_state_build(edges: DataFrame, path: str, k: int) -> dict:
     if k < 1:
         raise ValueError("k must be >= 1")
     spark = edges.sparkSession
-    from dwca_parquet_spark.fs import FS
-
     fs = FS(spark, path)
     for sub in ("segments", "core", "totals"):
         if fs.exists(f"{path}/{sub}"):
@@ -1062,7 +952,9 @@ def kcore_state_build(edges: DataFrame, path: str, k: int) -> dict:
         "n_core_edges": core.count(),
         "n_core_nodes": n_core_nodes,
     }
-    _kcore_write_state(spark, path, 0, e, core, totals)
+    _write_state(
+        spark, path, 0, {"segments": e, "core": core}, totals, _KCORE_TOTALS
+    )
     return totals
 
 
@@ -1070,13 +962,10 @@ def kcore_state_report(spark, path: str) -> DataFrame:
     """The current k-core edge set (u < v) from stored core segments —
     report(state) ≡ kcore(all appended edges, k) row-for-row (the
     op-154 gate pattern)."""
-    wm, totals = _kcore_watermark(spark, path)
+    wm, totals = _read_totals(spark, path, _KCORE_TOTALS)
     if totals is None:
         raise ValueError(f"no kcore state at {path!r} — build first")
-    from dwca_parquet_spark.fs import FS
-
-    fs = FS(spark, path)
-    committed, _ = _kcore_segs(fs, path, "core", wm)
+    committed, _ = split_segments(spark, f"{path}/core", wm)
     if not committed:
         raise ValueError(f"kcore state at {path!r} has no core segments")
     return spark.read.parquet(*committed).select("u", "v")
@@ -1101,17 +990,15 @@ def kcore_state_append(
     graph. BFS rounds are bounded by the region's diameter and peel
     rounds by its peeling depth — both loud failures, not silent
     wrong answers, when the bounds are exceeded."""
-    wm, totals = _kcore_watermark(spark, path)
+    wm, totals = _read_totals(spark, path, _KCORE_TOTALS)
     if totals is None:
         raise ValueError(f"no kcore state at {path!r} — build first")
     if batch_id <= wm:
         return False
     k = totals["k"]
-    from dwca_parquet_spark.fs import FS
-
+    seg_c, seg_o = split_segments(spark, f"{path}/segments", wm)
+    core_c, core_o = split_segments(spark, f"{path}/core", wm)
     fs = FS(spark, path)
-    seg_c, seg_o = _kcore_segs(fs, path, "segments", wm)
-    core_c, core_o = _kcore_segs(fs, path, "core", wm)
     for p in seg_o + core_o:
         fs.delete(p)
     if not seg_c or not core_c:
@@ -1146,7 +1033,7 @@ def kcore_state_append(
     n_new = delta.count()
     if n_new == 0:
         out = dict(totals)
-        _kcore_write_state(spark, path, batch_id, None, None, out)
+        _write_state(spark, path, batch_id, {}, out, _KCORE_TOTALS)
         return out
     union_edges = old.unionAll(delta)
 
@@ -1371,12 +1258,6 @@ def kcore_state_append(
         "n_core_edges": totals["n_core_edges"] + n_core_add,
         "n_core_nodes": totals["n_core_nodes"] + n_promoted,
     }
-    _kcore_write_state(
-        spark,
-        path,
-        batch_id,
-        delta,
-        core_add if n_core_add > 0 else None,
-        out,
-    )
+    segs = {"segments": delta, "core": core_add if n_core_add > 0 else None}
+    _write_state(spark, path, batch_id, segs, out, _KCORE_TOTALS)
     return out

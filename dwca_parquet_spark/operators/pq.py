@@ -342,8 +342,8 @@ def ivf_pq_topk_rerank(
     """Two-stage retrieval — the standard production composition: ADC over
     PQ codes produces a cheap shortlist of ``rerank`` candidates per
     query; only THOSE rows' original vectors are read and exact-scored.
-    PQ quantization error stops binding recall (measured in
-    tools/ann_sweep.py on the structureless sf0.1 fixture: ~0.19 → ~0.57
+    PQ quantization error stops binding recall (measured in SCALE.md's
+    ANN recall sweep on the structureless sf0.1 fixture: ~0.19 → ~0.57
     at rerank=100, nprobe=8 — the remaining gap is shortlist quality,
     tuned via rerank size and codebook (m, k)) while the expensive exact
     distance runs on rerank·|queries| rows instead of the corpus.

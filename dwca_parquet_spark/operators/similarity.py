@@ -132,25 +132,10 @@ def sql_cosine_scaled(sa: str, sb: str, dim: int) -> str:
     )
 
 
-def _plane_dot(svec: Column, j: int) -> Column:
-    """⟨scaled vec, plane_j⟩ with plane_j[i] = ±1 from the coefficient hash.
-    Integer sum — exact and order-free."""
-
-    def term(i: Column) -> Column:
-        coef = F.when(
-            ((F.lit(j * COEF_A) + i * COEF_B + COEF_C) % COEF_MOD) % 2 == 0, 1
-        ).otherwise(-1)
-        return F.element_at(svec, i) * coef
-
-    return F.aggregate(
-        F.transform(F.sequence(F.lit(1), F.size(svec)), term),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def sql_plane_dot(svec: str, j: int, dim: int) -> str:
-    """DuckDB mirror of :func:`_plane_dot` (same coefs, integer sum)."""
+    """DuckDB ⟨scaled vec, plane_j⟩ with plane_j[i] = ±1 from the
+    coefficient hash — the oracle twin of :func:`_bucket_udf`'s plane
+    dots (same coefs, integer sum: exact and order-free)."""
     coef = (
         f"(CASE WHEN (({j} * {COEF_A} + i * {COEF_B} + {COEF_C}) % {COEF_MOD}) % 2 = 0 "
         f"THEN 1 ELSE -1 END)"
@@ -164,7 +149,7 @@ def sql_plane_dot(svec: str, j: int, dim: int) -> str:
 def _bucket_udf(num_planes: int):
     """Arrow-batched bucket assignment: one int64 matmul against the ±1
     plane matrix computes all plane dots at once — identical integers to
-    the per-plane Catalyst fold (:func:`_plane_dot`), ~an order of
+    the oracle's per-plane fold (:func:`sql_plane_dot`), ~an order of
     magnitude faster than 8 interpreted aggregate-expressions per row."""
 
     @pandas_udf(LongType())
@@ -189,8 +174,7 @@ def rp_lsh_buckets(
 ) -> DataFrame:
     """(id, bucket): sign-LSH bucket id. Pure projection — scales linearly,
     no shuffle; the plane dots run as one Arrow-batched integer matmul per
-    batch (see :func:`_bucket_udf`; :func:`_plane_dot` remains as the
-    Catalyst-expression mirror of the oracle arithmetic)."""
+    batch (see :func:`_bucket_udf`)."""
     prepped = df.select(F.col(id_col), scaled_vec(F.col(vec_col)).alias("svec"))
     return prepped.select(
         F.col(id_col), _bucket_udf(num_planes)(F.col("svec")).alias("bucket")

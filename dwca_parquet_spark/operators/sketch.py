@@ -328,21 +328,14 @@ def _bk_mix_of(h: Column) -> Column:
     )
 
 
-def _bk_mixed(key: Column, salt: str) -> Column:
-    """One-expression form of stage-hash-then-mix. PREFER the staged
-    two-projection form in scan-stage hot paths (_with_bh): inlined
-    here, the per-char poly_hash fold is re-evaluated for every
-    occurrence of ``h`` in the quadratic (3×/row — measured 3.3 s vs
-    1.9 s on 600k keys)."""
-    return _bk_mix_of(H.poly_hash(F.concat(key.cast("string"), F.lit(salt))))
-
-
 def _with_bh(keyed: DataFrame, salt: str) -> DataFrame:
     """Add ``_bh`` to a (…, key) relation via TWO projections: the
     poly_hash staged as its own column so the quadratic mix references
     it without re-running the per-char fold (CollapseProject keeps a
     multiply-referenced non-cheap alias staged — the
-    shingle_hash_table discipline). Value-identical to _bk_mixed."""
+    shingle_hash_table discipline). Inlining the hash into the mix
+    instead re-runs the per-char fold for every occurrence of ``h``
+    (3×/row — measured 3.3 s vs 1.9 s on 600k keys)."""
     return (
         keyed.withColumn(
             "_gh",

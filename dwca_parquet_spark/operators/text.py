@@ -1652,7 +1652,7 @@ def gopher_quality(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # (CollapseProject keeps the stages because the expressions are
     # non-cheap; the q29 staging lesson, functions/hashing.py). The
     # remaining cost is one interpreted HOF pass per signal — measured
-    # per-signal in tools/gopher_sweep.py; the stop-word intersect
+    # per-signal in SCALE.md (Gopher rules); the stop-word intersect
     # below collapsed the worst one (8 passes -> 1).
     s0 = df.select(F.col(id_col), t.alias("_t"))
     tc = F.col("_t")

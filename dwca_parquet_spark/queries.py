@@ -44,13 +44,12 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # tracked caches of the PREVIOUS query (see the `query` decorator).  Callers
 # must therefore MATERIALIZE each query's DataFrame before building the next
 # one (build q_a → collect q_a → build q_b …), which is exactly how the
-# correctness driver, bench.py, tools/driver_check.py and tools/plan_audit.py
-# all run.  A caller that interleaves builds (build q_a, build q_b, collect
-# q_a) would have q_b's build unpersist q_a's tracked shingle/bucket tables,
-# silently reinstating the pathological lazy recomputation cache.py documents
-# (~552 s at sf0.1 for q31).  Such a caller must set AUTO_RELEASE_CACHES =
-# False and call cache.release_caches() itself between materializations.
-AUTO_RELEASE_CACHES = True
+# correctness driver, bench.py, perfbench/query_mix.py,
+# tools/driver_check.py and tools/plan_audit.py all run.  A caller that
+# interleaved builds (build q_a, build q_b, collect q_a) would have q_b's
+# build unpersist q_a's tracked shingle/bucket tables, silently reinstating
+# the pathological lazy recomputation cache.py documents (~552 s at sf0.1
+# for q31).
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
@@ -75,11 +74,8 @@ def query(name: str, oracle: str | None):
             # correctness driver runs 50 in one session) may never call
             # cache.release_caches() itself; releasing the PREVIOUS
             # queries' tracked persists here bounds cache accumulation to
-            # one query's intermediates. Safe ONLY under the sequencing
-            # contract documented at AUTO_RELEASE_CACHES above
-            # (build-then-materialize); interleaving callers disable it.
-            if AUTO_RELEASE_CACHES:
-                release_caches()
+            # one query's intermediates (the sequencing contract above).
+            release_caches()
             return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__

@@ -80,30 +80,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Load the fixture tables from ``sf_dir`` and register temp views.
-
-    Returns a dict name -> DataFrame. Column pruning and predicate pushdown
-    into these parquet scans is Catalyst's job — callers should express
-    filters/projections declaratively, never pre-collect.
-    """
-    names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    out = {}
-    for n in names:
-        df = spark.read.parquet(f"{sf_dir}/{n}.parquet")
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out

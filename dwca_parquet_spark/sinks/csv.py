@@ -19,7 +19,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from dwca_parquet_spark.fs import FS, parent
+from dwca_parquet_spark.fs import commit_single_file
 
 # Lossless null-vs-empty contract (property-tested): the WRITER emits null
 # as \N and empty string quoted (its default '""'); the READER maps \N back
@@ -56,18 +56,14 @@ def write_csv(
     if compression:
         opts["compression"] = compression
     if single_file:
-        fs = FS(df.sparkSession, path)
-        tmp = path + ".tmp.dir"
-        df.coalesce(1).write.mode("overwrite").options(**opts).csv(tmp)
-        parts = [p for p in fs.glob(tmp + "/part-*") if not p.endswith(".crc")]
-        if len(parts) != 1:
-            raise IOError(f"expected one part file in {tmp}, found {parts}")
-        fs.mkdirs(parent(path))
-        if fs.exists(path):
-            fs.delete(path)
-        fs.rename(parts[0], path)
-        fs.delete(tmp)
-        return path
+        return commit_single_file(
+            df.sparkSession,
+            path,
+            lambda tmp: df.coalesce(1)
+            .write.mode("overwrite")
+            .options(**opts)
+            .csv(tmp),
+        )
     df.write.mode("overwrite").options(**opts).csv(path)
     return path
 

@@ -27,7 +27,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame
 
-from dwca_parquet_spark.fs import FS, parent
+from dwca_parquet_spark.fs import FS, commit_single_file
 
 
 def write_parquet(
@@ -46,23 +46,14 @@ def write_parquet(
     if single_file:
         if partition_by:
             raise ValueError("single_file and partition_by are exclusive")
-        fs = FS(df.sparkSession, path)
-        tmp = path + ".tmp.dir"
-        (
-            df.coalesce(1)
+        return commit_single_file(
+            df.sparkSession,
+            path,
+            lambda tmp: df.coalesce(1)
             .write.mode("overwrite")
             .option("compression", compression)
-            .parquet(tmp)
+            .parquet(tmp),
         )
-        parts = fs.glob(tmp + "/part-*.parquet")
-        if len(parts) != 1:
-            raise IOError(f"expected one part file in {tmp}, found {parts}")
-        fs.mkdirs(parent(path))
-        if fs.exists(path):
-            fs.delete(path)
-        fs.rename(parts[0], path)
-        fs.delete(tmp)
-        return path
     writer = df.write.mode("overwrite").option("compression", compression)
     if partition_by:
         writer = writer.partitionBy(*partition_by)

@@ -24,24 +24,21 @@ State size is the activity matrix itself — Σ_key active_buckets rows,
 the same granularity as the panel output, NOT the event count: per-batch
 work is O(batch) + a merge bounded by the touched (key, bucket) cells.
 
-Replay safety: the transactional versioned-state pattern from
-streaming/sketches.py — staged ``v<batch_id>.tmp`` → atomic rename, the
-applied watermark IS the max complete version directory, and a replayed
-batch_id <= watermark is a no-op before any read or merge (re-adding an
-additive partial would double-count, exactly the sketch-state argument).
+Replay safety: the versioned-state format of ``dwca_parquet_spark.fs``
+(``latest_version`` / ``commit_version``) — staged ``v<batch_id>.tmp`` →
+atomic rename, the applied watermark IS the newest complete version, and
+a replayed batch_id <= watermark is a no-op before any read or merge
+(re-adding an additive partial would double-count).
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dwca_parquet_spark.fs import FS
+from dwca_parquet_spark.fs import commit_version, latest_version
 from dwca_parquet_spark.operators.events import resample_grid_ffill, ts_micros
-
-_VDIR = re.compile(r".*/v(\d+)$")
+from dwca_parquet_spark.streaming import run_stream
 
 # key cast to string so the state schema is stable whatever the stream's
 # key type (the sketches-state precedent); sum exact decimal, never double
@@ -50,22 +47,11 @@ ACT_SCHEMA = "key string, bucket long, n_events long, sum_value decimal(38,2)"
 HOUR_US = 3_600_000_000
 
 
-def applied_watermark(spark: SparkSession, state_path: str) -> int:
-    """Max batch id with a COMPLETE state version on disk (-1 if none)."""
-    fs = FS(spark, state_path)
-    best = -1
-    for p in fs.glob(str(state_path).rstrip("/") + "/v*"):
-        m = _VDIR.match(p)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best
-
-
 def read_activity_state(
     spark: SparkSession, state_path: str
 ) -> tuple[int, DataFrame]:
     """(watermark, state) — an empty correctly-typed table when none."""
-    wm = applied_watermark(spark, state_path)
+    wm = latest_version(spark, state_path)
     if wm < 0:
         return wm, spark.createDataFrame([], ACT_SCHEMA)
     base = f"{str(state_path).rstrip('/')}/v{wm}"
@@ -105,7 +91,6 @@ def apply_activity_batch(
     key_col: str = "user_id",
     value_col: str = "value",
     interval_us: int = HOUR_US,
-    keep_versions: int = 2,
 ) -> bool:
     """Fold one micro-batch into the stored activity state; False =
     replay skipped. The merge is ONE map-side-combinable groupBy over
@@ -122,17 +107,11 @@ def apply_activity_batch(
             F.sum("sum_value").cast("decimal(38,2)").alias("sum_value"),
         )
     )
-    base = str(state_path).rstrip("/")
-    fs = FS(spark, base)
-    tmp, final = f"{base}/v{batch_id}.tmp", f"{base}/v{batch_id}"
-    if fs.exists(tmp):
-        fs.delete(tmp)
-    merged.coalesce(1).write.parquet(f"{tmp}/act.parquet")
-    fs.rename(tmp, final)
-    for p in fs.glob(f"{base}/v*"):
-        m = _VDIR.match(p)
-        if m and int(m.group(1)) <= batch_id - keep_versions:
-            fs.delete(p)
+    commit_version(
+        spark, state_path, batch_id,
+        lambda tmp: merged.coalesce(1).write.parquet(f"{tmp}/act.parquet"),
+        keep=2,
+    )
     return True
 
 
@@ -192,12 +171,7 @@ def stream_activity_maintain(
             interval_us=interval_us,
         )
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, body)
 
 
 # ---------------------------------------------------------------------------
@@ -220,7 +194,7 @@ TREND_SCHEMA = (
 def read_trend_state(
     spark: SparkSession, state_path: str
 ) -> tuple[int, DataFrame]:
-    wm = applied_watermark(spark, state_path)
+    wm = latest_version(spark, state_path)
     if wm < 0:
         return wm, spark.createDataFrame([], TREND_SCHEMA)
     base = f"{str(state_path).rstrip('/')}/v{wm}"
@@ -266,7 +240,6 @@ def apply_trend_batch(
     value_col: str = "value",
     x_unit_us: int = HOUR_US,
     x_origin_us: int = 0,
-    keep_versions: int = 2,
 ) -> bool:
     """Fold one micro-batch's OLS moments into the stored state; False =
     replay skipped (the transactional versioned-state discipline)."""
@@ -288,17 +261,11 @@ def apply_trend_batch(
             F.sum("syy").cast("decimal(38,4)").alias("syy"),
         )
     )
-    base = str(state_path).rstrip("/")
-    fs = FS(spark, base)
-    tmp, final = f"{base}/v{batch_id}.tmp", f"{base}/v{batch_id}"
-    if fs.exists(tmp):
-        fs.delete(tmp)
-    merged.coalesce(1).write.parquet(f"{tmp}/trend.parquet")
-    fs.rename(tmp, final)
-    for p in fs.glob(f"{base}/v*"):
-        m = _VDIR.match(p)
-        if m and int(m.group(1)) <= batch_id - keep_versions:
-            fs.delete(p)
+    commit_version(
+        spark, state_path, batch_id,
+        lambda tmp: merged.coalesce(1).write.parquet(f"{tmp}/trend.parquet"),
+        keep=2,
+    )
     return True
 
 
@@ -342,12 +309,7 @@ def stream_trend_maintain(
             x_unit_us=x_unit_us, x_origin_us=x_origin_us,
         )
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, body)
 
 
 def activity_rolling_report(
@@ -430,7 +392,7 @@ def read_vdist_state(
     spark: SparkSession, state_path: str
 ) -> tuple[int, DataFrame]:
     """(watermark, state) — an empty correctly-typed table when none."""
-    wm = applied_watermark(spark, state_path)
+    wm = latest_version(spark, state_path)
     if wm < 0:
         return wm, spark.createDataFrame([], VDIST_SCHEMA)
     base = f"{str(state_path).rstrip('/')}/v{wm}"
@@ -446,7 +408,6 @@ def apply_vdist_batch(
     batch_id: int,
     key_col: str = "event_type",
     value_col: str = "value",
-    keep_versions: int = 2,
 ) -> bool:
     """Fold one micro-batch's (key, value) counts into the stored
     distribution; False = replay skipped (transactional discipline)."""
@@ -467,17 +428,11 @@ def apply_vdist_batch(
         .groupBy("key", "v")
         .agg(F.sum("c").cast("long").alias("c"))
     )
-    base = str(state_path).rstrip("/")
-    fs = FS(spark, base)
-    tmp, final = f"{base}/v{batch_id}.tmp", f"{base}/v{batch_id}"
-    if fs.exists(tmp):
-        fs.delete(tmp)
-    merged.write.parquet(f"{tmp}/vdist.parquet")
-    fs.rename(tmp, final)
-    for p in fs.glob(f"{base}/v*"):
-        m = _VDIR.match(p)
-        if m and int(m.group(1)) <= batch_id - keep_versions:
-            fs.delete(p)
+    commit_version(
+        spark, state_path, batch_id,
+        lambda tmp: merged.write.parquet(f"{tmp}/vdist.parquet"),
+        keep=2,
+    )
     return True
 
 
@@ -519,9 +474,4 @@ def stream_vdist_maintain(
             key_col=key_col, value_col=value_col,
         )
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, body)

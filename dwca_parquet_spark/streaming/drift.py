@@ -23,11 +23,11 @@ proportional — the op-104 incremental-dedup state class, the honest
 cost of an exact duplication rate over unbounded history (probed and
 merged per batch, never rescanned).
 
-Replay safety is the transactional versioned-state pattern shared with
-streaming/sketches.py (its docstring carries the full argument): state
-versions are ``v<batch_id>/`` directories written staged + renamed,
-the watermark IS the max complete version, and a replayed batch_id ≤
-watermark is a no-op before any read or merge.
+Replay safety is the versioned-state format of ``dwca_parquet_spark.fs``
+(``latest_version`` / ``commit_version``; its docstring carries the
+argument): state versions are ``v<batch_id>/`` directories written
+staged + renamed, the watermark IS the newest complete version, and a
+replayed batch_id ≤ watermark is a no-op before any read or merge.
 
 No reference analogue (the reference ships no streaming surface —
 SURVEY §2.F); composition of this repo's own gated ops 16/77/114/133.
@@ -35,12 +35,10 @@ SURVEY §2.F); composition of this repo's own gated ops 16/77/114/133.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dwca_parquet_spark.fs import FS
+from dwca_parquet_spark.fs import commit_version, latest_version
 from dwca_parquet_spark.operators.drift import (
     DRIFT_K,
     collect_side,
@@ -49,6 +47,7 @@ from dwca_parquet_spark.operators.drift import (
 )
 from dwca_parquet_spark.operators.rollup import log_hist_merge
 from dwca_parquet_spark.operators.sketch import bottomk_merge
+from dwca_parquet_spark.streaming import run_stream
 
 __all__ = [
     "apply_drift_batch",
@@ -58,19 +57,7 @@ __all__ = [
     "stream_drift_maintain",
 ]
 
-_VDIR = re.compile(r".*/v(\d+)$")
-
 _PANELS = ("mix", "hist", "dups", "sketch")
-
-
-def _watermark(spark: SparkSession, state_path: str) -> int:
-    fs = FS(spark, state_path)
-    best = -1
-    for p in fs.glob(str(state_path).rstrip("/") + "/v*"):
-        m = _VDIR.match(p)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best
 
 
 def read_drift_state(
@@ -78,7 +65,7 @@ def read_drift_state(
 ) -> tuple[int, dict[str, DataFrame] | None]:
     """(watermark, {panel: DataFrame}) — None tables when no state
     exists yet (the first fold seeds every panel from the batch)."""
-    wm = _watermark(spark, state_path)
+    wm = latest_version(spark, state_path)
     if wm < 0:
         return wm, None
     base = f"{str(state_path).rstrip('/')}/v{wm}"
@@ -95,7 +82,6 @@ def apply_drift_batch(
     id_col: str,
     text_col: str,
     source_col: str | None = None,
-    keep_versions: int = 2,
 ) -> bool:
     """Fold one micro-batch into the four stored panels; False =
     replay skipped. Exposed separately from the stream wiring so the
@@ -120,21 +106,15 @@ def apply_drift_batch(
             .agg(F.sum("n").alias("n"))
         )
         sketch_p = bottomk_merge(state["sketch"], sketch_p, DRIFT_K)
-    base = str(state_path).rstrip("/")
-    fs = FS(spark, base)
-    tmp, final = f"{base}/v{batch_id}.tmp", f"{base}/v{batch_id}"
-    if fs.exists(tmp):  # crashed predecessor attempt
-        fs.delete(tmp)
-    for name, df in zip(_PANELS, (mix_p, hist_p, dups_p, sketch_p)):
-        # mix/hist/sketch are bounded; dups is distinct-content-sized —
-        # keep it multi-file-capable, coalesce only the bounded three
-        out = df if name == "dups" else df.coalesce(1)
-        out.write.parquet(f"{tmp}/{name}.parquet")
-    fs.rename(tmp, final)  # the atomic commit point
-    for p in fs.glob(f"{base}/v*"):
-        m = _VDIR.match(p)
-        if m and int(m.group(1)) <= batch_id - keep_versions:
-            fs.delete(p)
+
+    def write(tmp: str) -> None:
+        for name, df in zip(_PANELS, (mix_p, hist_p, dups_p, sketch_p)):
+            # mix/hist/sketch are bounded; dups is distinct-content-sized
+            # — keep it multi-file-capable, coalesce only the bounded three
+            out = df if name == "dups" else df.coalesce(1)
+            out.write.parquet(f"{tmp}/{name}.parquet")
+
+    commit_version(spark, state_path, batch_id, write, keep=2)
     return True
 
 
@@ -185,9 +165,4 @@ def stream_drift_maintain(
             source_col=source_col,
         )
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, body)

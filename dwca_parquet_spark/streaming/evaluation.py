@@ -15,12 +15,12 @@ much history it summarizes; the law holds exactly AT the grid — i.e.
 fold ≡ one-shot auc_roc(round_to=same) — which is the honest statement
 (a continuous-score stream cannot keep unbounded per-score state).
 
-Replay safety is the transactional versioned-state pattern shared with
-streaming/sketches.py (its docstring carries the full argument): state
-versions are ``v<batch_id>/`` directories written staged + renamed, the
-watermark IS the max complete version, and a replayed batch_id ≤
-watermark is a no-op before any read or merge — re-merging counts
-would double-count, exactly like sketch partials.
+Replay safety is the versioned-state format of ``dwca_parquet_spark.fs``
+(``latest_version`` / ``commit_version``; its docstring carries the
+argument): state versions are ``v<batch_id>/`` directories written
+staged + renamed, the watermark IS the newest complete version, and a
+replayed batch_id ≤ watermark is a no-op before any read or merge —
+re-merging counts would double-count, exactly like sketch partials.
 
 Per-batch cost: one combinable groupBy over the batch + a merge against
 the bounded state table. Reading metrics any time:
@@ -31,33 +31,19 @@ is the right plan; `operators/evaluation.py auc_from_score_counts`).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dwca_parquet_spark.fs import FS
+from dwca_parquet_spark.fs import commit_version, latest_version
 from dwca_parquet_spark.operators.evaluation import (
     _by_score,
     _labeled,
     auc_from_score_counts,
 )
-
-_VDIR = re.compile(r".*/v(\d+)$")
+from dwca_parquet_spark.streaming import run_stream
 
 EVAL_SCHEMA = "score double, p long, n long"
 EVAL_ROUND_TO = 6
-
-
-def applied_watermark(spark: SparkSession, state_path: str) -> int:
-    """Max batch id with a COMPLETE state version on disk (-1 if none)."""
-    fs = FS(spark, state_path)
-    best = -1
-    for p in fs.glob(str(state_path).rstrip("/") + "/v*"):
-        m = _VDIR.match(p)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best
 
 
 def read_eval_state(
@@ -65,7 +51,7 @@ def read_eval_state(
 ) -> tuple[int, DataFrame]:
     """(watermark, per-score counts) — an empty bounded table when no
     state exists yet."""
-    wm = applied_watermark(spark, state_path)
+    wm = latest_version(spark, state_path)
     if wm < 0:
         return wm, spark.createDataFrame([], EVAL_SCHEMA)
     base = f"{str(state_path).rstrip('/')}/v{wm}"
@@ -80,7 +66,6 @@ def apply_eval_batch(
     label_col: str,
     score_col: str,
     round_to: int = EVAL_ROUND_TO,
-    keep_versions: int = 2,
 ) -> bool:
     """Fold one micro-batch's labeled scores into the stored counts;
     False = replay skipped. Exposed separately from the stream wiring
@@ -95,17 +80,11 @@ def apply_eval_batch(
         .groupBy("score")
         .agg(F.sum("p").alias("p"), F.sum("n").alias("n"))
     )
-    base = str(state_path).rstrip("/")
-    fs = FS(spark, base)
-    tmp, final = f"{base}/v{batch_id}.tmp", f"{base}/v{batch_id}"
-    if fs.exists(tmp):  # crashed predecessor attempt
-        fs.delete(tmp)
-    merged.coalesce(1).write.parquet(f"{tmp}/counts.parquet")
-    fs.rename(tmp, final)  # the atomic commit point
-    for p in fs.glob(f"{base}/v*"):
-        m = _VDIR.match(p)
-        if m and int(m.group(1)) <= batch_id - keep_versions:
-            fs.delete(p)
+    commit_version(
+        spark, state_path, batch_id,
+        lambda tmp: merged.coalesce(1).write.parquet(f"{tmp}/counts.parquet"),
+        keep=2,
+    )
     return True
 
 
@@ -136,9 +115,4 @@ def stream_eval_maintain(
             round_to=round_to,
         )
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, body)

@@ -25,8 +25,9 @@ State size: O(distinct funnel-stage events) — the stage-filtered, deduped
 projection of the log, NOT the raw stream (non-funnel types never enter;
 replays collapse in the distinct). Per-batch cost: one filter + one
 distinct-merge against state keyed (user, tp, us). Replay safety: the
-transactional versioned-state pattern (staged v<batch_id>.tmp → atomic
-rename; batch_id <= watermark is a no-op before any read or merge).
+versioned-state format of ``dwca_parquet_spark.fs`` (staged
+v<batch_id>.tmp → atomic rename; batch_id <= watermark is a no-op
+before any read or merge).
 
 The report multiplies the stored µs by 1000 and hands funnel() an
 epoch-nanos BIGINT column — ts_micros' integer-div branch recovers the
@@ -39,9 +40,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dwca_parquet_spark.fs import FS
+from dwca_parquet_spark.fs import commit_version, latest_version
 from dwca_parquet_spark.operators.events import funnel, ts_micros
-from dwca_parquet_spark.streaming.activity import _VDIR, applied_watermark
+from dwca_parquet_spark.streaming import run_stream
 
 FUNNEL_SCHEMA = "user string, tp string, us long"
 
@@ -50,7 +51,7 @@ def read_funnel_state(
     spark: SparkSession, state_path: str
 ) -> tuple[int, DataFrame]:
     """(watermark, state) — an empty correctly-typed table when none."""
-    wm = applied_watermark(spark, state_path)
+    wm = latest_version(spark, state_path)
     if wm < 0:
         return wm, spark.createDataFrame([], FUNNEL_SCHEMA)
     base = f"{str(state_path).rstrip('/')}/v{wm}"
@@ -68,7 +69,6 @@ def apply_funnel_batch(
     ts_col: str = "ts",
     user_col: str = "user_id",
     type_col: str = "event_type",
-    keep_versions: int = 2,
 ) -> bool:
     """Fold one micro-batch's funnel-stage events into the stored state;
     False = replay skipped (the transactional versioned-state
@@ -86,17 +86,11 @@ def apply_funnel_batch(
         .filter(F.col("user").isNotNull() & F.col("us").isNotNull())
     )
     merged = state.unionByName(part).distinct()
-    base = str(state_path).rstrip("/")
-    fs = FS(spark, base)
-    tmp, final = f"{base}/v{batch_id}.tmp", f"{base}/v{batch_id}"
-    if fs.exists(tmp):
-        fs.delete(tmp)
-    merged.write.parquet(f"{tmp}/funnel.parquet")
-    fs.rename(tmp, final)
-    for p in fs.glob(f"{base}/v*"):
-        m = _VDIR.match(p)
-        if m and int(m.group(1)) <= batch_id - keep_versions:
-            fs.delete(p)
+    commit_version(
+        spark, state_path, batch_id,
+        lambda tmp: merged.write.parquet(f"{tmp}/funnel.parquet"),
+        keep=2,
+    )
     return True
 
 
@@ -135,12 +129,7 @@ def stream_funnel_maintain(
             ts_col=ts_col, user_col=user_col, type_col=type_col,
         )
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, body)
 
 
 def stream_triangle_maintain(
@@ -168,9 +157,4 @@ def stream_triangle_maintain(
         # empty state is a build-first contract error, same as op 134
         triangle_state_append(spark, state_path, edges, batch_id + 1)
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, body)

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from dwca_parquet_spark.cache import release_caches
 from dwca_parquet_spark.operators.bloom import dedup_incremental
+from dwca_parquet_spark.streaming import run_stream
 
 
 def stream_ingest_dedup(
@@ -68,12 +69,7 @@ def stream_ingest_dedup(
         )
         release_caches()  # the probe's tracked persist, per batch
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, body)
 
 
 def stream_ingest_paragraph_dedup(
@@ -134,12 +130,7 @@ def stream_ingest_paragraph_dedup(
         )
         release_caches()
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, body)
 
 
 def stream_ingest_semantic_dedup(
@@ -235,9 +226,4 @@ def stream_ingest_semantic_dedup(
         ).parquet(assigned_path)
         release_caches()
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, body)

@@ -24,10 +24,10 @@ weights are outside the race (the op-162 domain).
 State size: exactly ≤ n rows + the decimal race key — O(n), not
 O(stream). Per-batch cost: one scan-stage key projection over the
 batch, a union with ≤ n state rows, one TakeOrderedAndProject. Replay
-safety: the transactional versioned-state pattern (staged
+safety: the versioned-state format of ``dwca_parquet_spark.fs`` (staged
 v<batch_id>.tmp → atomic rename; batch_id <= watermark is a no-op
-before any read or merge — the same `applied_watermark` the other
-streaming states use).
+before any read or merge — the same ``latest_version`` /
+``commit_version`` the other streaming states use).
 """
 
 from __future__ import annotations
@@ -35,9 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dwca_parquet_spark.fs import FS
+from dwca_parquet_spark.fs import commit_version, latest_version
 from dwca_parquet_spark.operators.sampling import _es_key
-from dwca_parquet_spark.streaming.activity import _VDIR, applied_watermark
+from dwca_parquet_spark.streaming import run_stream
 
 
 def read_reservoir_state(
@@ -46,7 +46,7 @@ def read_reservoir_state(
     """(watermark, state) — state is None when no version exists (the
     schema is the caller's row schema + `_ek`, so there is no fixed
     empty frame to synthesize)."""
-    wm = applied_watermark(spark, state_path)
+    wm = latest_version(spark, state_path)
     if wm < 0:
         return wm, None
     base = f"{str(state_path).rstrip('/')}/v{wm}"
@@ -62,7 +62,6 @@ def apply_reservoir_batch(
     weight_col: str,
     n: int,
     salt: str = "",
-    keep_versions: int = 2,
 ) -> bool:
     """Fold one micro-batch into the stored reservoir; False = replay
     skipped. The merged candidate set is (≤ n state rows) ∪ (the
@@ -90,17 +89,11 @@ def apply_reservoir_batch(
         .orderBy(F.col("_ek").asc(), F.col(key_col).asc())
         .limit(n)
     )
-    base = str(state_path).rstrip("/")
-    fs = FS(spark, base)
-    tmp, final = f"{base}/v{batch_id}.tmp", f"{base}/v{batch_id}"
-    if fs.exists(tmp):
-        fs.delete(tmp)
-    top.write.parquet(f"{tmp}/sample.parquet")
-    fs.rename(tmp, final)
-    for p in fs.glob(f"{base}/v*"):
-        m = _VDIR.match(p)
-        if m and int(m.group(1)) <= batch_id - keep_versions:
-            fs.delete(p)
+    commit_version(
+        spark, state_path, batch_id,
+        lambda tmp: top.write.parquet(f"{tmp}/sample.parquet"),
+        keep=2,
+    )
     return True
 
 
@@ -125,7 +118,6 @@ def apply_group_reservoir_batch(
     weight_col: str,
     k: int,
     salt: str = "",
-    keep_versions: int = 2,
 ) -> bool:
     """Per-group variant (SURVEY §2.G op 164): the state holds each
     group's k smallest race keys — ≤ k rows per OBSERVED group, the
@@ -158,17 +150,11 @@ def apply_group_reservoir_batch(
         .filter(F.col("_rk") <= k)
         .drop("_rk")
     )
-    base = str(state_path).rstrip("/")
-    fs = FS(spark, base)
-    tmp, final = f"{base}/v{batch_id}.tmp", f"{base}/v{batch_id}"
-    if fs.exists(tmp):
-        fs.delete(tmp)
-    top.write.parquet(f"{tmp}/sample.parquet")
-    fs.rename(tmp, final)
-    for p in fs.glob(f"{base}/v*"):
-        m = _VDIR.match(p)
-        if m and int(m.group(1)) <= batch_id - keep_versions:
-            fs.delete(p)
+    commit_version(
+        spark, state_path, batch_id,
+        lambda tmp: top.write.parquet(f"{tmp}/sample.parquet"),
+        keep=2,
+    )
     return True
 
 
@@ -192,9 +178,4 @@ def stream_reservoir_maintain(
             key_col, weight_col, n, salt=salt,
         )
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, body)

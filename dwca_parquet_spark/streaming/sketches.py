@@ -15,34 +15,27 @@ micro-batch's bounded partial into the stored state. The part that is
 NOT free is replay: foreachBatch may re-deliver a batch after a crash,
 and unlike streaming/ingest.py's content-keyed dedup (where a replay
 finds its rows already stored and appends nothing), RE-MERGING a sketch
-partial double-counts. Sketch state therefore needs the TRANSACTIONAL
-idempotency pattern:
-
-- state versions are directories ``v<batch_id>/`` under the state path,
-  written staged (``.tmp`` then one atomic rename) so a crashed write is
-  never read as state;
-- the applied-batch watermark IS the max complete version directory —
-  no side meta file that could desync from the data it describes;
-- a replayed batch_id <= watermark is a no-op BEFORE any read or merge.
-
-Spark guarantees micro-batch ids are monotonically increasing per
-checkpoint, so one watermark (not a set) suffices.
+partial double-counts. Sketch state therefore uses the transactional
+versioned-state format of ``dwca_parquet_spark.fs`` (``latest_version`` /
+``commit_version``): state versions are ``v<batch_id>/`` directories
+written staged and renamed, the applied-batch watermark IS the newest
+complete version (no side meta file that could desync from the data it
+describes), and a replayed batch_id <= watermark is a no-op BEFORE any
+read or merge.
 
 Scale: per batch the work is cms_build/hll_build over the batch (one
 combinable groupBy each) plus a merge against state tables bounded by
 depth*width and 2^b rows — per-batch cost is O(batch) regardless of how
-much history the sketches summarize. Old versions are pruned to
-``keep_versions``; state on disk is a few bounded parquet files.
+much history the sketches summarize. The two newest versions are kept;
+state on disk is a few bounded parquet files.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
-
-from dwca_parquet_spark.fs import FS
 from pyspark.sql import functions as F
+
+from dwca_parquet_spark.fs import FS, commit_version, latest_version
 
 from dwca_parquet_spark.operators.sketch import (
     HLL_B,
@@ -56,8 +49,7 @@ from dwca_parquet_spark.operators.sketch import (
     hll_build,
     hll_merge,
 )
-
-_VDIR = re.compile(r".*/v(\d+)$")
+from dwca_parquet_spark.streaming import run_stream
 
 CMS_SCHEMA = "row int, col long, cnt long"
 HLL_SCHEMA = "bucket long, register int"
@@ -67,25 +59,12 @@ BK_SCHEMA = "key string, _bh long"
 BK_K = 256
 
 
-def applied_watermark(spark: SparkSession, state_path: str) -> int:
-    """Max batch id with a COMPLETE state version on disk (-1 if none).
-    Complete = the version directory exists under its final name — the
-    staged-rename write makes that an all-or-nothing signal."""
-    fs = FS(spark, state_path)
-    best = -1
-    for p in fs.glob(str(state_path).rstrip("/") + "/v*"):
-        m = _VDIR.match(p)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best
-
-
 def read_sketch_state(
     spark: SparkSession, state_path: str
 ) -> tuple[int, DataFrame, DataFrame, DataFrame]:
     """(watermark, cms, hll, bottomk) — empty bounded tables when no
     state yet."""
-    wm = applied_watermark(spark, state_path)
+    wm = latest_version(spark, state_path)
     if wm < 0:
         return (
             wm,
@@ -123,7 +102,6 @@ def apply_batch(
     depth: int = 4,
     b: int = HLL_B,
     k: int = BK_K,
-    keep_versions: int = 2,
 ) -> bool:
     """Fold one micro-batch into the stored sketches; False = replay
     skipped. Exposed separately from the stream wiring so the replay
@@ -139,19 +117,13 @@ def apply_batch(
         item_col, k,
     )
     new_bk = bottomk_merge(bk, batch_bk, k)
-    base = str(state_path).rstrip("/")
-    fs = FS(spark, base)
-    tmp, final = f"{base}/v{batch_id}.tmp", f"{base}/v{batch_id}"
-    if fs.exists(tmp):  # crashed predecessor attempt
-        fs.delete(tmp)
-    new_cms.coalesce(1).write.parquet(f"{tmp}/cms.parquet")
-    new_hll.coalesce(1).write.parquet(f"{tmp}/hll.parquet")
-    new_bk.coalesce(1).write.parquet(f"{tmp}/bk.parquet")
-    fs.rename(tmp, final)  # the atomic commit point
-    for p in fs.glob(f"{base}/v*"):
-        m = _VDIR.match(p)
-        if m and int(m.group(1)) <= batch_id - keep_versions:
-            fs.delete(p)
+
+    def write(tmp: str) -> None:
+        new_cms.coalesce(1).write.parquet(f"{tmp}/cms.parquet")
+        new_hll.coalesce(1).write.parquet(f"{tmp}/hll.parquet")
+        new_bk.coalesce(1).write.parquet(f"{tmp}/bk.parquet")
+
+    commit_version(spark, state_path, batch_id, write, keep=2)
     return True
 
 
@@ -176,12 +148,7 @@ def stream_sketch_maintain(
             width=width, depth=depth, b=b, k=k,
         )
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, body)
 
 
 # ---------------------------------------------------------------------------
@@ -192,8 +159,7 @@ def stream_sketch_maintain(
 # lattice merge — per-group union-distinct → re-rank — which equals
 # building over the unioned inputs EXACTLY (the same KMV law op 114
 # pins), so fold ≡ one-shot bottomk_by_group row-for-row. Same
-# transactional versioned-state replay pattern as the global sketches
-# above (the module docstring carries the argument).
+# versioned-state replay rules as the global sketches above.
 # ---------------------------------------------------------------------------
 
 GBK_SCHEMA = "grp string, key string, _bh long"
@@ -204,7 +170,7 @@ def read_group_bottomk_state(
 ) -> tuple[int, DataFrame]:
     """(watermark, per-group state) — empty bounded table when no state
     exists yet. The state is ≤ |groups|·k rows, never corpus-sized."""
-    wm = applied_watermark(spark, state_path)
+    wm = latest_version(spark, state_path)
     if wm < 0:
         return wm, spark.createDataFrame([], GBK_SCHEMA)
     base = f"{str(state_path).rstrip('/')}/v{wm}"
@@ -219,7 +185,6 @@ def apply_group_bottomk_batch(
     group_col: str,
     key_col: str,
     k: int = BK_K,
-    keep_versions: int = 2,
 ) -> bool:
     """Fold one micro-batch's (group, key) pairs into the stored
     per-group bottom-k; False = replay skipped. Group and key are cast
@@ -238,17 +203,11 @@ def apply_group_bottomk_batch(
         k,
     )
     merged = bottomk_group_merge(state, part, k)
-    base = str(state_path).rstrip("/")
-    fs = FS(spark, base)
-    tmp, final = f"{base}/v{batch_id}.tmp", f"{base}/v{batch_id}"
-    if fs.exists(tmp):  # crashed predecessor attempt
-        fs.delete(tmp)
-    merged.coalesce(1).write.parquet(f"{tmp}/gbk.parquet")
-    fs.rename(tmp, final)  # the atomic commit point
-    for p in fs.glob(f"{base}/v*"):
-        m = _VDIR.match(p)
-        if m and int(m.group(1)) <= batch_id - keep_versions:
-            fs.delete(p)
+    commit_version(
+        spark, state_path, batch_id,
+        lambda tmp: merged.coalesce(1).write.parquet(f"{tmp}/gbk.parquet"),
+        keep=2,
+    )
     return True
 
 
@@ -280,9 +239,4 @@ def stream_group_bottomk_maintain(
             spark, state_path, batch, batch_id, group_col, key_col, k=k
         )
 
-    return (
-        stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, body)

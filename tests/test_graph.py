@@ -233,3 +233,26 @@ def test_pagerank_continue_empty_graph(spark, tmp_path):
     # state advanced: the meta records 5 completed iterations
     meta = spark.read.parquet(f"{path}/v5/meta.parquet").first()
     assert meta["iters"] == 5
+
+
+def test_pagerank_continue_rejects_non_positive_iters(spark, tmp_path):
+    """0 more rounds would commit over the only stored version in place
+    (a crash between its delete and rename loses the state); a negative
+    count would commit a version below the watermark that is never read.
+    Both are refused before any state is touched."""
+    import pytest
+
+    from dwca_parquet_spark.operators.graph import (
+        pagerank_continue,
+        pagerank_state_save,
+    )
+
+    edges = spark.createDataFrame([("a", "b"), ("b", "a")], ["src", "dst"])
+    path = tmp_path / "pr"
+    pagerank_state_save(edges, str(path), iters=2)
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="more_iters"):
+            pagerank_continue(edges, str(path), bad)
+    assert sorted(p.name for p in path.iterdir()) == ["v2"]
+    meta = spark.read.parquet(f"{path}/v2/meta.parquet").first()
+    assert meta["iters"] == 2

@@ -11,8 +11,8 @@ The op-154 gate pattern:
   * replay of a seen batch_id is a transactional no-op;
   * a crash orphan (segment above the totals watermark) is ignored and
     healed — the ADVICE-r10 triangle lesson, baked in from the start.
-The planted-cascade append sweep lives in tools/kcore_incr_sweep.py
-(SCALE.md carries the numbers).
+The planted-cascade append sweep was a one-off script, now only in git
+history; SCALE.md carries its numbers.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """salted_join correctness: identical results to the plain equi-join
-(VERDICT r3 item 8's correctness half; the wall-time half is measured by
-tools/skew_sweep.py and recorded in SCALE.md).
+(VERDICT r3 item 8's correctness half; the wall-time half is recorded in
+SCALE.md).
 
 The fixture plants a hot key holding ~40% of the fact rows, unmatched fact
 keys (exercising left-join semantics), and unmatched dim keys (must not

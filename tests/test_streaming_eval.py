@@ -7,9 +7,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dwca_parquet_spark.fs import latest_version as applied_watermark
 from dwca_parquet_spark.operators.evaluation import auc_roc
 from dwca_parquet_spark.streaming.evaluation import (
-    applied_watermark,
     apply_eval_batch,
     eval_state_metrics,
     read_eval_state,

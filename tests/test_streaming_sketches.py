@@ -9,6 +9,7 @@ from __future__ import annotations
 import duckdb
 from pyspark.sql import functions as F
 
+from dwca_parquet_spark.fs import latest_version as applied_watermark
 from dwca_parquet_spark.operators.sketch import (
     cms_build,
     hll_build,
@@ -17,7 +18,6 @@ from dwca_parquet_spark.operators.sketch import (
 )
 from dwca_parquet_spark.streaming.sketches import (
     apply_batch,
-    applied_watermark,
     read_sketch_state,
     stream_sketch_maintain,
 )
@@ -153,7 +153,7 @@ def test_old_versions_pruned(spark, tmp_path):
     for i in range(4):
         apply_batch(
             spark, state, toks, i, "tok",
-            width=W, depth=D, b=B, keep_versions=2,
+            width=W, depth=D, b=B,
         )
     import pathlib
 

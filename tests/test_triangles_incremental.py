@@ -7,8 +7,8 @@ The op-134/136 gate pattern:
     triangle-free batches, an empty delta;
   * earlier segment files are NEVER rewritten by an append (byte-pinned);
   * replay of a seen batch_id is a transactional no-op.
-The planted-hub append sweep lives in tools/triangle_incr_sweep.py
-(SCALE.md carries the numbers).
+The planted-hub append sweep was a one-off script, now only in git
+history; SCALE.md carries its numbers.
 """
 
 from __future__ import annotations
