@@ -72,8 +72,6 @@ def dwca_flatten(
     ext_dfs: list[DataFrame],
     footprint_from_core_only: bool = True,
     fix_latlon: bool = False,
-    broadcast_extensions: bool = True,
-    validate_footprint: bool = True,
 ) -> DataFrame:
     """Star-join + fid + geom — the rendered query.sql as a DataFrame plan."""
     out = core_df
@@ -84,9 +82,7 @@ def dwca_flatten(
             for colname in ext_df.columns
             if colname in taken
         }
-        e = ext_df.withColumnsRenamed(renames)
-        if broadcast_extensions:
-            e = F.broadcast(e)
+        e = F.broadcast(ext_df.withColumnsRenamed(renames))
         # join key may itself have been renamed — resolve after renaming
         ext_key = renames.get(layer.id_col, layer.id_col)
         out = out.join(e, out[archive.core.id_col] == e[ext_key], "inner")
@@ -100,13 +96,11 @@ def dwca_flatten(
     lat = F.col(LAT_COL) if LAT_COL in out.columns else F.lit(None).cast("double")
     lon = F.col(LON_COL) if LON_COL in out.columns else F.lit(None).cast("double")
     point = point_wkt(lat, lon, fix_latlon)
-    # validate_footprint: malformed WKT → NULL → point fallback, where
-    # DuckDB's ST_GeomFromText would abort the whole conversion. Validation
-    # is a scan-stage regex (functions/geometry.py); valid WKT passes
-    # through byte-identical (modulo trim), so oracle parity is unaffected.
-    footprint = F.col(FOOTPRINT_COL).cast("string")
-    if validate_footprint:
-        footprint = validate_wkt(footprint)
+    # Malformed WKT → NULL → point fallback, where DuckDB's
+    # ST_GeomFromText would abort the whole conversion. Validation is a
+    # scan-stage regex (functions/geometry.py); valid WKT passes through
+    # byte-identical (modulo trim), so oracle parity is unaffected.
+    footprint = validate_wkt(F.col(FOOTPRINT_COL).cast("string"))
     geom = F.coalesce(footprint, point) if has_footprint else point
 
     return out.select(

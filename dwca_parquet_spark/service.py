@@ -26,9 +26,9 @@ Jobs:
   fetch the DwC-A (``:35-42``), flatten (star join) and write versioned +
   latest parquet. A repeat request costs one metadata probe.
 - ``job_csw``    ⇔ ``libs/csw.py:104-113``: harvest → 21-col record table
-  → parquet at ``cfg.csw_path``.
+  → parquet at ``cfg.csw_output``.
 - ``job_geoapi`` ⇔ ``libs/geoapi.py:68-75``: harvest → pygeoapi configs →
-  single JSON-array file at ``cfg.geoapi_path``.
+  single JSON-array file at ``cfg.geoapi_output``.
 """
 
 from __future__ import annotations
@@ -83,6 +83,14 @@ class ServiceConfig:
     @property
     def resources_base(self) -> str:
         return self.store.rstrip("/") + self.catalog.resources_prefix.rstrip("/")
+
+    @property
+    def csw_output(self) -> str:
+        return self.store.rstrip("/") + self.csw_path
+
+    @property
+    def geoapi_output(self) -> str:
+        return self.store.rstrip("/") + self.geoapi_path
 
 
 @dataclass
@@ -182,14 +190,12 @@ def job_version_to_parquet(
 
 def job_csw(spark: SparkSession, client: IptClient, cfg: ServiceConfig) -> str:
     records = eml_to_csw_records(spark, harvest_rows(client), cfg.catalog)
-    return write_parquet(
-        records, cfg.store.rstrip("/") + cfg.csw_path, single_file=True
-    )
+    return write_parquet(records, cfg.csw_output, single_file=True)
 
 
 def job_geoapi(spark: SparkSession, client: IptClient, cfg: ServiceConfig) -> str:
     df = ipt_to_pygeoapi_resources(spark, harvest_geoapi_rows(client), cfg.catalog)
-    return write_json_array(df, cfg.store.rstrip("/") + cfg.geoapi_path)
+    return write_json_array(df, cfg.geoapi_output)
 
 
 class ResourceService:
@@ -246,7 +252,7 @@ class ResourceService:
     def generate_csw(self) -> dict:
         job = self.jobs.enqueue(job_csw, self.spark, self.client, self.cfg)
         return {
-            "result": self.cfg.store.rstrip("/") + self.cfg.csw_path,
+            "result": self.cfg.csw_output,
             "job_id": job.id,
         }
 
@@ -254,6 +260,6 @@ class ResourceService:
     def generate_geoapi(self) -> dict:
         job = self.jobs.enqueue(job_geoapi, self.spark, self.client, self.cfg)
         return {
-            "result": self.cfg.store.rstrip("/") + self.cfg.geoapi_path,
+            "result": self.cfg.geoapi_output,
             "job_id": job.id,
         }

@@ -21,6 +21,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from dwca_parquet_spark.sinks.parquet import COMPRESSION
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
@@ -50,7 +52,7 @@ def get_spark(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
-        .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.parquet.compression.codec", COMPRESSION)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # Dimension tables in the star schema are small; the default 10 MB

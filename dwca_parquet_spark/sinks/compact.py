@@ -9,8 +9,7 @@ listing, not bytes. Compaction rewrites a parquet directory into
 Shape: size the output from the ACTUAL byte total (one FS listing, no
 data read), then ``coalesce(n_out)`` — a shuffle-FREE narrow merge of
 input splits into fewer write tasks (repartition would shuffle every
-byte; compaction's job is IO, not balance — pass ``balance=True`` only
-when downstream needs equal files and the extra shuffle is worth it).
+byte; compaction's job is IO, not balance).
 The swap is write-to-temp → rename-away → rename-in → delete, the same
 staged-rename discipline as sinks/parquet.py's single-file writer; a
 reader never observes a half-written directory (rename is atomic per FS
@@ -22,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from dwca_parquet_spark.fs import FS
+from dwca_parquet_spark.sinks.parquet import COMPRESSION
 
 
 def compaction_plan(
@@ -45,20 +45,15 @@ def compaction_plan(
 
 
 def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = 128 << 20,
-    balance: bool = False,
-    compression: str = "zstd",
+    spark: SparkSession, path: str, target_bytes: int = 128 << 20
 ) -> dict:
     """Rewrite ``path`` into ~target_bytes files when the current count
     exceeds TWICE the planned one; no-op otherwise (the hysteresis stops
     compaction churn on same-codec tables: rewriting its own output
-    changes nothing, so the next plan is a no-op). When ``compression``
-    DIFFERS from the table's current codec the byte total shifts and one
-    extra pass may run before the table is stable — harmless, and it
-    converges because the codec no longer changes. Returns the plan plus
-    ``acted``."""
+    changes nothing, so the next plan is a no-op). When the table's current
+    codec is not zstd the byte total shifts and one extra pass may run
+    before the table is stable — harmless, and it converges because the
+    codec no longer changes. Returns the plan plus ``acted``."""
     plan = compaction_plan(spark, path, target_bytes)
     if plan["n_files"] <= 2 * plan["n_out"]:
         plan["acted"] = False
@@ -69,9 +64,13 @@ def compact_parquet(
     for stale in (tmp, old):  # crashed predecessor leftovers
         if fs.exists(stale):
             fs.delete(stale)
-    df = spark.read.parquet(base)
-    df = df.repartition(plan["n_out"]) if balance else df.coalesce(plan["n_out"])
-    df.write.mode("overwrite").option("compression", compression).parquet(tmp)
+    (
+        spark.read.parquet(base)
+        .coalesce(plan["n_out"])
+        .write.mode("overwrite")
+        .option("compression", COMPRESSION)
+        .parquet(tmp)
+    )
     fs.rename(base, old)
     try:
         fs.rename(tmp, base)

@@ -4,8 +4,7 @@ The reference never writes CSV — it only *reads* DwC-A CSVs
 (``/root/reference/src/dwca_parquet/templates/query.sql:2,4``) — but the
 engine's sink surface mirrors its source surface so datasets can round-trip.
 Defaults chosen for lossless round-trips: header row, explicit null marker,
-quoting handled by Spark's writer, optional zstd-less plain text (CSV codecs
-gzip/bzip2 available via ``compression``).
+quoting handled by Spark's writer, uncompressed comma-separated text.
 
 Scale note: like every Spark file sink this writes a directory of part
 files — one per partition, written in parallel by executors.
@@ -41,8 +40,6 @@ def write_csv(
     df: DataFrame,
     path: str | Path,
     single_file: bool = False,
-    compression: str | None = None,
-    sep: str = ",",
 ) -> str:
     """Write df as CSV. Returns the final path (string, URI-safe).
 
@@ -52,19 +49,16 @@ def write_csv(
     store URIs work identically to local paths.
     """
     path = str(path)
-    opts = dict(CSV_OPTIONS, sep=sep)
-    if compression:
-        opts["compression"] = compression
     if single_file:
         return commit_single_file(
             df.sparkSession,
             path,
             lambda tmp: df.coalesce(1)
             .write.mode("overwrite")
-            .options(**opts)
+            .options(**CSV_OPTIONS)
             .csv(tmp),
         )
-    df.write.mode("overwrite").options(**opts).csv(path)
+    df.write.mode("overwrite").options(**CSV_OPTIONS).csv(path)
     return path
 
 
@@ -72,15 +66,10 @@ def read_csv(
     spark: SparkSession,
     path: str | Path,
     schema: StructType | str,
-    sep: str = ",",
 ) -> DataFrame:
     """Read back a write_csv output with an explicit schema.
 
     Schema-first (no inference) is the determinism rule from SURVEY §1.2:
     sniffer differences between engines are the #1 round-trip hazard.
     """
-    return (
-        spark.read.options(**dict(CSV_OPTIONS, sep=sep))
-        .schema(schema)
-        .csv(str(path))
-    )
+    return spark.read.options(**CSV_OPTIONS).schema(schema).csv(str(path))

@@ -15,11 +15,12 @@ GeoParquet footer metadata, so (SURVEY §4.3) the sink:
    single-file outputs; a 100 TB deployment would use Sedona's GeoParquet
    writer or a custom committer instead, noted here deliberately).
 
-Object-store outputs work too: part files that are not driver-local are
-staged through the Hadoop FileSystem (``copyToLocalFile`` → pyarrow rewrite
-→ ``copyFromLocalFile``), so the same sink serves ``file://``, ``hdfs://``
-and ``s3a://`` URIs — the staging round-trip is FS-side streaming, bounded
-by the catalog-sized outputs this pass is documented for.
+Every part file is staged through the path's own Hadoop FileSystem
+(``copyToLocalFile`` → pyarrow rewrite → ``copyFromLocalFile``), so the
+same sink serves plain paths, ``file://``, ``hdfs://`` and ``s3a://`` URIs,
+and a plain path resolves against ``fs.defaultFS`` like every other sink
+write — the staging round-trip is FS-side streaming, bounded by the
+catalog-sized outputs this pass is documented for.
 
 Metadata follows the GeoParquet 1.0.0 spec: version, primary_column, and a
 per-column dict with ``encoding: WKB``, observed ``geometry_types``, bbox.
@@ -28,15 +29,17 @@ per-column dict with ``encoding: WKB``, observed ``geometry_types``, bbox.
 from __future__ import annotations
 
 import json
+import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dwca_parquet_spark.functions.geometry import geometry_type, wkt_to_wkb
-from dwca_parquet_spark.fs import FS, has_scheme
-from dwca_parquet_spark.sinks.parquet import write_parquet
+from dwca_parquet_spark.fs import FS
+from dwca_parquet_spark.sinks.parquet import COMPRESSION, write_parquet
 
+GEOM_COL = "geom"  # the WKT column dwca_flatten emits
 _TITLECASE = {
     "POINT": "Point",
     "LINESTRING": "LineString",
@@ -47,7 +50,7 @@ _TITLECASE = {
 }
 
 
-def _geo_metadata(geom_col: str, geometry_types: list[str], bbox: list[float] | None) -> dict:
+def _geo_metadata(geometry_types: list[str], bbox: list[float] | None) -> dict:
     col_meta: dict = {
         "encoding": "WKB",
         "geometry_types": [
@@ -58,8 +61,8 @@ def _geo_metadata(geom_col: str, geometry_types: list[str], bbox: list[float] | 
         col_meta["bbox"] = bbox
     return {
         "version": "1.0.0",
-        "primary_column": geom_col,
-        "columns": {geom_col: col_meta},
+        "primary_column": GEOM_COL,
+        "columns": {GEOM_COL: col_meta},
     }
 
 
@@ -70,17 +73,15 @@ def _inject_geo_metadata(parquet_file: Path, geo: dict) -> None:
     meta = dict(table.schema.metadata or {})
     meta[b"geo"] = json.dumps(geo).encode()
     pq.write_table(
-        table.replace_schema_metadata(meta), parquet_file, compression="zstd"
+        table.replace_schema_metadata(meta), parquet_file, compression=COMPRESSION
     )
 
 
 def write_geoparquet(
-    df: DataFrame,
-    path: str | Path,
-    geom_col: str = "geom",
-    single_file: bool = True,
+    df: DataFrame, path: str | Path, single_file: bool = True
 ) -> str:
-    """Write df (with a WKT ``geom_col``) as GeoParquet. Returns the path.
+    """Write df (with a WKT ``geom`` column, as dwca_flatten emits) as
+    GeoParquet. Returns the path.
 
     The WKT column is replaced by its WKB encoding under the same name;
     invalid WKT becomes NULL geometry. geometry_types and bbox for the
@@ -92,8 +93,8 @@ def write_geoparquet(
     path = str(path)
     stats = (
         df.select(
-            geometry_type(F.col(geom_col)).alias("_gt"),
-            F.col(geom_col).alias("_wkt"),
+            geometry_type(F.col(GEOM_COL)).alias("_gt"),
+            F.col(GEOM_COL).alias("_wkt"),
         )
         .select(
             "_gt",
@@ -127,27 +128,15 @@ def write_geoparquet(
         if stats["xmin"] is not None
         else None
     )
-    geo = _geo_metadata(geom_col, sorted(stats["types"]), bbox)
+    geo = _geo_metadata(sorted(stats["types"]), bbox)
 
-    out = df.withColumn(geom_col, wkt_to_wkb(F.col(geom_col)))
+    out = df.withColumn(GEOM_COL, wkt_to_wkb(F.col(GEOM_COL)))
     written = write_parquet(out, path, single_file=single_file)
-    if not has_scheme(str(written)):
-        # Driver-local output: rewrite footers in place.
-        local = Path(str(written))
-        targets = [local] if local.is_file() else sorted(local.glob("*.parquet"))
-        for part in targets:
-            _inject_geo_metadata(part, geo)
-        return written
-    # URI output (file://, hdfs://, s3a://): stage each part through the
-    # path's own Hadoop FileSystem — file:// exercises the exact dispatch
-    # an object store takes.
-    import tempfile
-
     fs = FS(df.sparkSession, written)
     parts = (
-        [str(written)]
+        [written]
         if fs.is_file(written)
-        else fs.glob(f"{str(written).rstrip('/')}/*.parquet")
+        else fs.glob(f"{written.rstrip('/')}/*.parquet")
     )
     with tempfile.TemporaryDirectory(prefix="geoparquet_meta_") as tmp:
         for i, part in enumerate(parts):

@@ -25,7 +25,6 @@ from dwca_parquet_spark.fs import FS, parent
 def write_json_array(
     df: DataFrame,
     path: str | Path,
-    indent: int | None = None,
     max_rows: int = 100_000,
 ) -> str:
     """``max_rows`` guards the driver-side collect: this sink is for

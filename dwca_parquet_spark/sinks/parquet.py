@@ -16,9 +16,8 @@ take the same code path; nothing touches the driver's local disk.
 
 ``single_file=True`` reproduces the reference's one-file layout
 (coalesce(1) + commit-rename) for small/medium outputs; directory layout is
-the default and the only sane choice at 100 TB, where output partitioning
-(``partition_by``) replaces the single-file contract and rename-based
-commits give way to Spark's committer.
+the default for bulk data, where rename-based commits give way to Spark's
+committer.
 """
 
 from __future__ import annotations
@@ -29,35 +28,30 @@ from pyspark.sql import DataFrame
 
 from dwca_parquet_spark.fs import FS, commit_single_file
 
+# The one output codec of every parquet write that sets one: the reference
+# publishes zstd parquet (``libs/parquet.py:48``).
+COMPRESSION = "zstd"
+
 
 def write_parquet(
-    df: DataFrame,
-    path: str | Path,
-    single_file: bool = False,
-    partition_by: list[str] | None = None,
-    compression: str = "zstd",
+    df: DataFrame, path: str | Path, single_file: bool = False
 ) -> str:
     """Write df as zstd parquet. Returns the final path (string, URI-safe).
 
     single_file: coalesce to one task and rename the part file to ``path``
-    (reference writes one .parquet object). Incompatible with partition_by.
+    (reference writes one .parquet object).
     """
     path = str(path)
     if single_file:
-        if partition_by:
-            raise ValueError("single_file and partition_by are exclusive")
         return commit_single_file(
             df.sparkSession,
             path,
             lambda tmp: df.coalesce(1)
             .write.mode("overwrite")
-            .option("compression", compression)
+            .option("compression", COMPRESSION)
             .parquet(tmp),
         )
-    writer = df.write.mode("overwrite").option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    df.write.mode("overwrite").option("compression", COMPRESSION).parquet(path)
     return path
 
 
@@ -76,7 +70,6 @@ def write_versioned(
     base_dir: str | Path,
     dataset_id: str,
     version: str | int,
-    single_file: bool = True,
 ) -> tuple[str, str] | None:
     """Versioned + latest outputs, computing the plan ONCE.
 
@@ -91,7 +84,7 @@ def write_versioned(
     fs = FS(df.sparkSession, versioned)
     if fs.exists(versioned):
         return None
-    write_parquet(df, versioned, single_file=single_file)
+    write_parquet(df, versioned, single_file=True)
     if fs.exists(latest):
         fs.delete(latest)
     fs.copy(versioned, latest)
@@ -105,7 +98,6 @@ def write_bucketed(
     num_buckets: int,
     sort_cols: list[str] | None = None,
     path: str | Path | None = None,
-    compression: str = "zstd",
 ) -> str:
     """Write df as a bucketed parquet TABLE (hash-bucketed on
     ``bucket_cols`` into ``num_buckets`` files per partition, optionally
@@ -128,7 +120,7 @@ def write_bucketed(
     writer = (
         df.write.mode("overwrite")
         .format("parquet")
-        .option("compression", compression)
+        .option("compression", COMPRESSION)
         .bucketBy(num_buckets, *bucket_cols)
     )
     if sort_cols:
@@ -144,7 +136,6 @@ def write_clustered(
     path: str | Path,
     cluster_by: list[str],
     num_files: int | None = None,
-    compression: str = "zstd",
 ) -> str:
     """Range-clustered parquet layout: rows range-partitioned by
     ``cluster_by`` across files and sorted within each file.
@@ -170,7 +161,7 @@ def write_clustered(
     (
         part.sortWithinPartitions(*cols)
         .write.mode("overwrite")
-        .option("compression", compression)
+        .option("compression", COMPRESSION)
         .parquet(str(path))
     )
     return str(path)
@@ -180,7 +171,6 @@ def write_partitioned_dynamic(
     df: DataFrame,
     path: str | Path,
     partition_by: list[str],
-    compression: str = "zstd",
 ) -> str:
     """Overwrite ONLY the hive partitions present in ``df``, leaving every
     other partition untouched — the per-batch landing write for a table
@@ -201,7 +191,7 @@ def write_partitioned_dynamic(
     try:
         (
             df.write.mode("overwrite")
-            .option("compression", compression)
+            .option("compression", COMPRESSION)
             .partitionBy(*partition_by)
             .parquet(str(path))
         )

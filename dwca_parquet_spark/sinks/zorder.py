@@ -27,6 +27,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dwca_parquet_spark.sinks.parquet import COMPRESSION
+
 
 def _bucket_expr(col: str, bounds: list[float], bits: int):
     """Rank bucket in [0, 2^bits): #boundaries ≤ value (null → 0).
@@ -66,7 +68,6 @@ def write_zordered(
     cols: list[str],
     bits: int = 6,
     num_files: int | None = None,
-    compression: str = "zstd",
 ) -> None:
     """Write df z-order-clustered on ``cols``: range-partitioned AND
     sorted within partitions by the Morton value, so every parquet file
@@ -79,7 +80,7 @@ def write_zordered(
         .sortWithinPartitions("_zval")
         .drop("_zval")
         .write.mode("overwrite")
-        .option("compression", compression)
+        .option("compression", COMPRESSION)
         .parquet(str(path))
     )
 

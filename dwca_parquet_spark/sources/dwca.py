@@ -17,11 +17,6 @@ SQL string to DuckDB+zipfs; here the archive descriptor drives declarative
   (``libs/parquet.py:35-42``). At 100 TB the staging step is the ingest
   boundary: unpack once, convert to parquet early, and every downstream
   operator reads columnar.
-
-Schema policy: ``infer_schema=True`` mirrors DuckDB's sniffer
-(``templates/query.sql:2,4``; extensions use full-sample inference =
-``samplingRatio 1.0``). For oracle-exact typing, ``infer_schema=False``
-reads everything as string — differential tests use explicit casts.
 """
 
 from __future__ import annotations
@@ -29,7 +24,6 @@ from __future__ import annotations
 import codecs
 import os
 import shutil
-import urllib.request
 import zipfile
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -93,10 +87,18 @@ def _read_headers(path: Path, encoding: str, sep: str) -> list[str]:
 def _parse_layer(node: ElementTree.Element, root: Path) -> SourceLayer:
     files = node.find(f"{_DWC_NS}files")
     location = files.find(f"{_DWC_NS}location").text
+    # meta.xml is archive input: a "../…" or absolute location must not
+    # make the job read, convert and publish a file outside the archive
+    path = root / location
+    if not path.resolve().is_relative_to(root.resolve()):
+        raise ValueError(
+            f"malformed meta.xml in {root}: <location> {location!r} "
+            "points outside the archive"
+        )
     sep = _decode_sep(node.get("fieldsTerminatedBy"))
     encoding = node.get("encoding") or "UTF-8"
     ignore = int(node.get("ignoreHeaderLines") or 1)
-    headers = _read_headers(root / location, encoding, sep)
+    headers = _read_headers(path, encoding, sep)
     id_node = node.find(f"{_DWC_NS}id")
     if id_node is None:
         id_node = node.find(f"{_DWC_NS}coreid")
@@ -114,24 +116,16 @@ def _parse_layer(node: ElementTree.Element, root: Path) -> SourceLayer:
 
 
 def stage_archive(source: str | Path, staging_dir: str | Path) -> Path:
-    """Download (http/https) or copy a DwC-A zip, extract to staging_dir.
+    """Extract a local DwC-A zip to ``staging_dir/extracted``.
 
-    The cache-then-extract step mirrors reference ``libs/parquet.py:35-42``
-    (httpfs+zipfs don't compose there; Spark has no zip source here). The
-    caller owns the staging lifecycle (reference deletes in ``finally``,
-    ``parquet.py:52-54`` — use a tempfile.TemporaryDirectory context).
+    The extract step mirrors reference ``libs/parquet.py:35-42`` (httpfs+
+    zipfs don't compose there; Spark has no zip source here); the archive
+    bytes arrive through ``IptClient.fetch``. The caller owns the staging
+    lifecycle (reference deletes in ``finally``, ``parquet.py:52-54`` — use
+    a tempfile.TemporaryDirectory context).
     """
-    staging = Path(staging_dir)
-    staging.mkdir(parents=True, exist_ok=True)
-    src = str(source)
-    local_zip = staging / "archive.zip"
-    if src.startswith(("http://", "https://")):
-        with urllib.request.urlopen(src) as resp, open(local_zip, "wb") as out:
-            shutil.copyfileobj(resp, out)
-    else:
-        shutil.copy(src, local_zip)
-    extract_dir = staging / "extracted"
-    with zipfile.ZipFile(local_zip) as zf:
+    extract_dir = Path(staging_dir) / "extracted"
+    with zipfile.ZipFile(source) as zf:
         zf.extractall(extract_dir)
     return extract_dir
 
@@ -167,7 +161,6 @@ def read_layer(
     spark: SparkSession,
     archive: DwcaArchive,
     layer: SourceLayer,
-    infer_schema: bool = True,
     honor_ignore_header_lines: bool = False,
 ) -> DataFrame:
     """One layer → DataFrame via spark.read.csv (reference query.sql:2,4).
@@ -204,15 +197,15 @@ def read_layer(
             shutil.copyfileobj(src, out)
         os.replace(tmp, trimmed)
         path = trimmed
-    reader = (
+    df = (
         spark.read.option("header", True)
         .option("sep", layer.sep)
         .option("encoding", layer.encoding)
         .option("multiLine", False)
+        .option("inferSchema", True)
+        .option("samplingRatio", 1.0)
+        .csv(str(path))
     )
-    if infer_schema:
-        reader = reader.option("inferSchema", True).option("samplingRatio", 1.0)
-    df = reader.csv(str(path))
     return df.alias(layer.alias)
 
 
@@ -220,14 +213,12 @@ def read_dwca(
     spark: SparkSession,
     source: str | Path,
     staging_dir: str | Path,
-    infer_schema: bool = True,
     honor_ignore_header_lines: bool = False,
 ) -> tuple[DwcaArchive, DataFrame, list[DataFrame]]:
     """Full archive → (descriptor, core DataFrame, extension DataFrames).
 
     Layers are read concurrently, one pool thread per layer in the archive
-    (so no pool-size setting): with ``infer_schema`` Spark's CSV reader
-    runs two jobs per layer before it returns (a header ``take(1)`` and
+    (so no pool-size setting): Spark's CSV reader runs two jobs per layer before it returns (a header ``take(1)`` and
     the full-sample inference pass), and the layers are independent, so
     their jobs share the cluster instead of queueing one layer after
     another. Each thread target is wrapped with
@@ -250,7 +241,7 @@ def read_dwca(
         futures = [
             pool.submit(
                 _inheriting(spark, read_layer),
-                spark, archive, layer, infer_schema, honor_ignore_header_lines,
+                spark, archive, layer, honor_ignore_header_lines,
             )
             for layer in layers
         ]

@@ -12,7 +12,7 @@ contract-explicit wrappers over Spark's JSON reader/writer:
   ``_corrupt_record`` column (PERMISSIVE), 'drop' discards them
   (DROPMALFORMED), 'fail' aborts (FAILFAST). Crawl-derived JSONL always
   carries some garbage; losing it silently is the one wrong default.
-- writes are one-object-per-line (Spark's json sink), zstd-compressed;
+- writes are one-object-per-line (Spark's json sink), gzip-compressed;
   rewrite through :mod:`dwca_parquet_spark.sinks.compact` applies
   unchanged since the sink is a directory of part files like any other.
 """
@@ -49,12 +49,10 @@ def read_jsonl(
     )
 
 
-def write_jsonl(
-    df: DataFrame, path: str | Path, compression: str = "gzip"
-) -> str:
+def write_jsonl(df: DataFrame, path: str | Path) -> str:
     """Write one JSON object per line (nulls omitted — the JSONL
     convention; readers treat absent and null alike under an explicit
-    schema). gzip default: universally decompressible by downstream
-    tooling, unlike zstd-for-json."""
-    df.write.mode("overwrite").option("compression", compression).json(str(path))
+    schema). gzip: universally decompressible by downstream tooling,
+    unlike zstd-for-json."""
+    df.write.mode("overwrite").option("compression", "gzip").json(str(path))
     return str(path)

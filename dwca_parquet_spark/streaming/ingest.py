@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from dwca_parquet_spark.cache import release_caches
 from dwca_parquet_spark.operators.bloom import dedup_incremental
+from dwca_parquet_spark.sinks.parquet import COMPRESSION, write_partitioned_dynamic
 from dwca_parquet_spark.streaming import run_stream
 
 
@@ -64,7 +65,7 @@ def stream_ingest_dedup(
             .filter(F.col("_rn") == 1)
             .drop("_chash_b", "_rn")
         )
-        fresh.write.mode("append").option("compression", "zstd").parquet(
+        fresh.write.mode("append").option("compression", COMPRESSION).parquet(
             store_path
         )
         release_caches()  # the probe's tracked persist, per batch
@@ -104,7 +105,6 @@ def stream_ingest_paragraph_dedup(
         dedup_paragraphs_incremental,
         paragraph_state,
     )
-    from dwca_parquet_spark.sinks.parquet import write_partitioned_dynamic
 
     spark = stream.sparkSession
 
@@ -125,7 +125,7 @@ def stream_ingest_paragraph_dedup(
         fresh_k = paragraph_state(batch, id_col, text_col, unit).join(
             state.select("_k", "_k2"), ["_k", "_k2"], "left_anti"
         ).localCheckpoint(eager=True)
-        fresh_k.write.mode("append").option("compression", "zstd").parquet(
+        fresh_k.write.mode("append").option("compression", COMPRESSION).parquet(
             state_store
         )
         release_caches()
@@ -172,7 +172,6 @@ def stream_ingest_semantic_dedup(
     from dwca_parquet_spark.operators.semdedup import (
         semantic_dedup_incremental,
     )
-    from dwca_parquet_spark.sinks.parquet import write_partitioned_dynamic
 
     spark = stream.sparkSession
 
@@ -222,7 +221,7 @@ def stream_ingest_semantic_dedup(
         # prescribes (and the seed write used) — a flat append into a
         # partitioned directory is invisible to partition discovery
         fresh.write.mode("append").partitionBy("cell").option(
-            "compression", "zstd"
+            "compression", COMPRESSION
         ).parquet(assigned_path)
         release_caches()
 

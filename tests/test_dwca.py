@@ -269,6 +269,8 @@ def test_malformed_archive_errors(tmp_path):
     with zipfile.ZipFile(z, "w") as zf:
         zf.writestr("occurrence.txt", "id\tname\n1\tx\n")
     extracted = stage_archive(z, tmp_path / "s1")
+    # extraction reads the source zip in place: no copy of it is staged
+    assert [p.name for p in (tmp_path / "s1").iterdir()] == ["extracted"]
     with pytest.raises(FileNotFoundError, match="no meta.xml"):
         parse_meta(extracted)
 
@@ -283,6 +285,27 @@ def test_malformed_archive_errors(tmp_path):
     extracted2 = stage_archive(z2, tmp_path / "s2")
     with pytest.raises(ValueError, match="no <core>"):
         parse_meta(extracted2)
+
+    # a <location> escaping the archive — relative "../" or absolute — is
+    # refused before any read, though a readable table sits at the target
+    secret = tmp_path / "secret.txt"
+    secret.write_text("id\tname\n1\tnot part of the archive\n")
+    for i, location in enumerate(["../../secret.txt", str(secret)]):
+        z3 = tmp_path / f"escape{i}.zip"
+        with zipfile.ZipFile(z3, "w") as zf:
+            zf.writestr(
+                "meta.xml",
+                '<?xml version="1.0"?>'
+                '<archive xmlns="http://rs.tdwg.org/dwc/text/">'
+                '<core fieldsTerminatedBy="\\t"><files>'
+                f"<location>{location}</location></files>"
+                '<id index="0"/></core></archive>',
+            )
+        extracted3 = stage_archive(z3, tmp_path / f"s3_{i}")
+        assert (extracted3 / location).resolve() == secret.resolve()
+        with pytest.raises(ValueError, match="outside the archive") as err:
+            parse_meta(extracted3)
+        assert repr(location) in str(err.value)
 
 
 def _oracle_readable(archive):

@@ -225,3 +225,68 @@ def test_dynamic_partition_overwrite_and_pruning(spark, tmp_path):
     )
     assert "PartitionFilters: [" in plan
     assert "o_orderstatus" in plan.split("PartitionFilters:")[1].split("]")[0]
+
+
+def _codecs(path) -> set[str]:
+    """Every column chunk's codec across the parquet files at ``path`` (a
+    file or a directory tree), read from the pyarrow footers."""
+    import pyarrow.parquet as pq
+
+    p = Path(path)
+    files = [p] if p.is_file() else sorted(p.rglob("*.parquet"))
+    codecs = set()
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        for rg in range(meta.num_row_groups):
+            for c in range(meta.num_columns):
+                codecs.add(meta.row_group(rg).column(c).compression)
+    return codecs
+
+
+def test_sinks_write_zstd(spark, tmp_path):
+    """Every parquet sink writes the reference's codec (zstd,
+    ``libs/parquet.py:48``) under a plain session whose own default is
+    snappy, so a sink that drops the codec option fails here."""
+    from dwca_parquet_spark.sinks.compact import compact_parquet
+    from dwca_parquet_spark.sinks.geoparquet import write_geoparquet
+    from dwca_parquet_spark.sinks.parquet import (
+        write_bucketed,
+        write_clustered,
+        write_partitioned_dynamic,
+    )
+    from dwca_parquet_spark.sinks.zorder import write_zordered
+    from dwca_parquet_spark.sources.jsonl import write_jsonl
+
+    assert spark.conf.get("spark.sql.parquet.compression.codec") == "snappy"
+    df = spark.createDataFrame(
+        [(i, f"n{i % 3}", float(i) / 7) for i in range(40)],
+        "id long, name string, x double",
+    )
+    outs = [
+        write_parquet(df, tmp_path / "single.parquet", single_file=True),
+        write_parquet(df, tmp_path / "dir.parquet"),
+        *write_versioned(df, tmp_path / "store", "ds", 1),
+        write_clustered(df, tmp_path / "clustered", ["id"], num_files=2),
+        write_partitioned_dynamic(df, tmp_path / "dynamic", ["name"]),
+    ]
+    write_zordered(df, tmp_path / "zordered", ["id", "x"], bits=2, num_files=2)
+    outs.append(tmp_path / "zordered")
+    try:
+        write_bucketed(df, "codec_bucketed", ["id"], 2, path=tmp_path / "bucketed")
+        outs.append(tmp_path / "bucketed")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS codec_bucketed")
+    # a snappy table: the compaction rewrite itself must set the codec
+    shattered = tmp_path / "shattered"
+    df.repartition(8).write.parquet(str(shattered))
+    assert _codecs(shattered) == {"SNAPPY"}
+    assert compact_parquet(spark, str(shattered), target_bytes=1 << 40)["acted"]
+    outs.append(shattered)
+    geo = df.selectExpr("id", "concat('POINT (', x, ' 1.0)') AS geom")
+    outs.append(write_geoparquet(geo, tmp_path / "geo.parquet"))
+    for out in outs:
+        assert _codecs(to_local(out)) == {"ZSTD"}, out
+
+    write_jsonl(df, tmp_path / "jsonl")
+    parts = sorted(p.name for p in (tmp_path / "jsonl").glob("part-*"))
+    assert parts and all(n.endswith(".json.gz") for n in parts), parts
