@@ -24,8 +24,6 @@ signatures.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 
@@ -719,6 +717,12 @@ def dup_pairs_from_hash_sets(
     )
 
 
+# connected_components executor-budget bounds: 8M edges ≈ 128 MB through
+# the local kernel's one task; 2M nodes ≈ 32 MB of broadcast (node, label)
+_CC_LOCAL_MAX_EDGES = 8_000_000
+_CC_BROADCAST_MAX_NODES = 2_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     a: str = "id_a",
@@ -772,21 +776,16 @@ def connected_components(
         edges = edges.distinct()
     edges = edges.persist()
     # Size dispatch (round 13; the CC-broadcast/interval_join precedent):
-    # below an env-tunable edge bound the whole component computation
+    # at or below _CC_LOCAL_MAX_EDGES the whole component computation
     # runs as ONE vectorized min-label kernel in a single task — zero
     # iteration rounds, zero per-round checkpoint+checksum driver
     # actions (the q44 decomposition measured the 6-round loop at
     # ~3.4 s against ~0.1 s of actual arithmetic). The count() below
     # doubles as the action that materializes the persisted edges (the
     # init aggregate used to). Graphs above the bound keep the
-    # distributed loop — the 100 TB path is unchanged; the default
-    # bound (8M edges ≈ 128 MB through one task, label arrays ≪ that)
-    # is an executor-budget constant, not a fixture constant.
-    local_max = int(
-        os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "8000000")
-    )
+    # distributed loop — the 100 TB path is unchanged.
     n_edges = edges.count()
-    if n_edges <= local_max:
+    if n_edges <= _CC_LOCAL_MAX_EDGES:
         labels = _cc_local_arrow(edges).localCheckpoint(eager=True)
         edges.unpersist()
         return labels
@@ -830,11 +829,7 @@ def connected_components(
     # table (= node set, fixed across rounds) fits a broadcast, hint it:
     # the per-round plan becomes one streaming pass over the cached
     # edges + the groupBy exchange. Big graphs keep the shuffle join.
-    # Local default 2M nodes (~32 MB of (node,label) longs); production
-    # clusters can raise it via the env knob to their executor budget.
-    bcast_labels = row0["n"] <= int(
-        os.environ.get("SPARK_GRAFT_CC_BROADCAST_MAX_NODES", "2000000")
-    )
+    bcast_labels = row0["n"] <= _CC_BROADCAST_MAX_NODES
     for _ in range(max_iter):
         lbl_dst = labels.select(F.col("node").alias("dst"), "label")
         lbl_jmp = labels.select(

@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dwca_parquet_spark.operators.relational import plan_size_bytes
+
 __all__ = [
     "auc_roc",
     "auc_from_score_counts",
@@ -215,12 +217,7 @@ def auc_roc(
     # the EXACT distinct count is measured, and only a genuinely large
     # count pays the bucket machinery (with the edges as a second tiny
     # job over the cache). All three tiers are bit-identical (pinned).
-    est = None
-    try:
-        stats = labeled._jdf.queryExecution().optimizedPlan().stats()
-        est = int(str(stats.sizeInBytes()))
-    except Exception:
-        pass  # stats unavailable → keep the scale-safe careful path
+    est = plan_size_bytes(labeled)  # None → the scale-safe careful path
     if est is not None and est <= _AUC_DRIVER_MAX_BYTES:
         return _auc_driver(labeled)
     g = _by_score(labeled)
@@ -374,12 +371,7 @@ def pr_curve(
     labeled = _labeled(df, label_col, score_col, round_to)
     g = _by_score(labeled)
     if round_to is None:
-        est = None
-        try:
-            stats = labeled._jdf.queryExecution().optimizedPlan().stats()
-            est = int(str(stats.sizeInBytes()))
-        except Exception:
-            pass  # stats unavailable → measure (the scale-safe default)
+        est = plan_size_bytes(labeled)  # None → measure (scale-safe)
         if est is None or est > _AUC_INPUT_SMALL_BYTES:
             from dwca_parquet_spark.cache import persist_tracked
 

@@ -15,6 +15,7 @@ Determinism conventions (shared with the DuckDB oracle, see queries.py):
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -141,42 +142,23 @@ def _bucket_fdiv(name: str, w: int, integral: bool) -> Column:
     return F.floor(F.col(name) / w).cast("long")
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
+def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's size estimate (bytes) for a DataFrame's optimized plan —
     the same statistic the planner compares against
-    ``autoBroadcastJoinThreshold`` when it decides broadcast joins."""
-    return int(
-        str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    )
+    ``autoBroadcastJoinThreshold`` when it decides broadcast joins — or
+    None when the plan has no stats (callers pick their scale-safe path)."""
+    try:
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        return int(str(stats.sizeInBytes()))
+    except (AttributeError, Py4JError):  # no JVM plan, or no stats for it
+        return None
 
 
 def _broadcast_threshold_bytes(spark) -> int:
-    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (-1 = disabled).
-
-    Read RESOLVED from the JVM session state (exact for every legal
-    byte-string Spark accepts, incl. t/tb/p/pb suffixes the first
-    hand-rolled parser here crashed on — code-review r12); the string
-    parser remains only as a fallback for mocked sessions."""
-    try:
-        return int(
-            spark._jsparkSession.sessionState()
-            .conf()
-            .autoBroadcastJoinThreshold()
-        )
-    except Exception:  # noqa: BLE001 — non-JVM/mocked session
-        raw = str(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        ).strip().lower()
-        mult = 1
-        for suf, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                       ("tb", 1 << 40), ("pb", 1 << 50),
-                       ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                       ("t", 1 << 40), ("p", 1 << 50),
-                       ("b", 1)):
-            if raw.endswith(suf):
-                raw, mult = raw[: -len(suf)], m
-                break
-        return int(raw) * mult
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (-1 = disabled),
+    read resolved from the JVM session state, which parses every
+    byte-string Spark accepts (k/m/g/t/p suffixes included)."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
 
 
 def _all_integral(dtypes: dict[str, str], *cols: str) -> bool:
@@ -210,8 +192,8 @@ def _interval_strategy(
     thr = _broadcast_threshold_bytes(points.sparkSession)
     if thr <= 0:
         return "bucket"
-    raw = _plan_size_bytes(intervals)
-    if raw > thr:
+    raw = plan_size_bytes(intervals)
+    if raw is None or raw > thr:
         return "bucket"
     stats = intervals.agg(
         F.coalesce(

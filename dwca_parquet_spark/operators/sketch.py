@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dwca_parquet_spark.functions import hashing as H
+from dwca_parquet_spark.operators.relational import plan_size_bytes
 
 CMS_P = 2_147_483_647
 
@@ -402,11 +403,8 @@ def bottomk_build(
         F.col("key").isNotNull()
     )
     if prune is None:
-        try:
-            stats = df._jdf.queryExecution().optimizedPlan().stats()
-            prune = int(str(stats.sizeInBytes())) > _BK_PRUNE_MIN_BYTES
-        except Exception:  # stats unavailable → keep the scale-safe plan
-            prune = True
+        est = plan_size_bytes(df)  # None → keep the scale-safe plan
+        prune = est is None or est > _BK_PRUNE_MIN_BYTES
     if prune:
         hashed = _with_bh(keyed, salt).mapInPandas(
             _bk_prune_factory(k), f"key {key_type}, _bh long"

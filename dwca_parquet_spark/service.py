@@ -62,7 +62,7 @@ from dwca_parquet_spark.sinks.parquet import (
     write_versioned,
 )
 from dwca_parquet_spark.sources.dwca import read_dwca
-from dwca_parquet_spark.sources.ipt import IptClient, parse_eml
+from dwca_parquet_spark.sources.ipt import IptClient, parse_eml, version_from
 
 
 @dataclass
@@ -179,10 +179,9 @@ def job_version_to_parquet(
     versioned, _ = versioned_paths(cfg.resources_base, resource_id, version)
     if FS(spark, versioned).exists(versioned):
         return None
-    url = f"{cfg.catalog.ipt_url}/archive.do?r={resource_id}&v={version}"
     with tempfile.TemporaryDirectory(dir=cfg.staging_dir) as tmp:
         cache = Path(tmp) / f"{resource_id}-v{version}.zip"
-        cache.write_bytes(client.fetch(url))
+        cache.write_bytes(client.archive(resource_id, version))
         archive, core_df, ext_dfs = read_dwca(spark, cache, Path(tmp) / "staging")
         flat = dwca_flatten(archive, core_df, ext_dfs)
         return write_versioned(flat, cfg.resources_base, resource_id, version)
@@ -227,10 +226,8 @@ class ResourceService:
     def get_resource(self, resource_id: str) -> dict:
         ipt = self.cfg.catalog.ipt_url
         meta = parse_eml(self.client.eml(resource_id))
-        package_id = meta["metadata"]["identifier"]
         # reference: packageId "doi:…/vN" → version (resources.py:56-59)
-        parts = package_id.split("/")
-        version = parts[-1].replace("v", "") if len(parts) > 1 else "1"
+        version = version_from(meta["metadata"]["identifier"], "1")
         job = self.jobs.enqueue(
             job_version_to_parquet,
             self.spark, self.client, self.cfg, resource_id, version,

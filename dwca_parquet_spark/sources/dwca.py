@@ -8,9 +8,10 @@ SQL string to DuckDB+zipfs; here the archive descriptor drives declarative
 - ``meta.xml`` drives everything: file locations, encodings, field
   separators, and the positional id/coreid join keys
   (``/root/reference/src/dwca_parquet/libs/dwca.py:8-44``).
-- Separators arrive as escaped strings ("\\t") and the id column NAME is
-  resolved by looking the ``<id index=…>`` position up in the header row
-  (``dwca.py:19-25``).
+- Separators arrive as escaped strings ("\\t"). The id column NAME is the
+  ``<id index=…>`` position looked up in the column names of Spark's header
+  parse, the only one here (the reference also splits the header row in
+  Python, ``dwca.py:19-25``): the driver reads meta.xml alone.
 - Spark cannot scan inside zip archives (DuckDB used its zipfs extension,
   ``settings.py:50,59``), so the archive stages to a local directory first —
   the same cache-then-read pattern the reference uses for remote archives
@@ -26,7 +27,7 @@ import os
 import shutil
 import zipfile
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from pathlib import Path
 from typing import Callable
 from xml.etree import ElementTree
@@ -42,18 +43,20 @@ class SourceLayer:
     """One delimited file inside the archive (core or extension).
 
     Mirrors the reference's layer dict (``libs/dwca.py:8-29``): ``alias`` is
-    the filename stem (used as table alias, ``dwca.py:10``), ``id_col`` the
-    join-key column name resolved from the positional index
-    (``dwca.py:24-25``).
+    the filename stem (used as table alias, ``dwca.py:10``), ``id_index``
+    the meta.xml ``<id>``/``<coreid>`` position (``dwca.py:24-25``). Spark's
+    header parse gives ``headers`` and ``id_col`` (the name at ``id_index``):
+    ``read_dwca`` fills them from the frame it read.
     """
 
     alias: str
     location: str
     sep: str
     encoding: str
-    headers: list[str]
-    id_col: str
-    ignore_header_lines: int = 1
+    id_index: int
+    ignore_header_lines: int
+    headers: list[str] = field(default_factory=list)
+    id_col: str = ""
 
 
 @dataclass
@@ -65,10 +68,6 @@ class DwcaArchive:
     core: SourceLayer
     extensions: list[SourceLayer] = field(default_factory=list)
 
-    @property
-    def core_columns(self) -> list[str]:
-        return self.core.headers
-
 
 def _decode_sep(raw: str | None) -> str:
     """meta.xml fieldsTerminatedBy arrives escaped ('\\t'); decode like the
@@ -78,40 +77,37 @@ def _decode_sep(raw: str | None) -> str:
     return codecs.decode(raw, "unicode_escape")
 
 
-def _read_headers(path: Path, encoding: str, sep: str) -> list[str]:
-    with open(path, encoding=encoding) as f:
-        first = f.readline().rstrip("\r\n")
-    return [h.strip() for h in first.split(sep)]
+def _parse_layer(node: ElementTree.Element, root: Path, name: str) -> SourceLayer:
+    def malformed(what: str) -> ValueError:
+        return ValueError(f"malformed meta.xml in {root}: {name} {what}")
 
-
-def _parse_layer(node: ElementTree.Element, root: Path) -> SourceLayer:
-    files = node.find(f"{_DWC_NS}files")
-    location = files.find(f"{_DWC_NS}location").text
+    location = node.findtext(f"{_DWC_NS}files/{_DWC_NS}location")
+    if not location:
+        raise malformed("has no <files><location>")
     # meta.xml is archive input: a "../…" or absolute location must not
     # make the job read, convert and publish a file outside the archive
     path = root / location
     if not path.resolve().is_relative_to(root.resolve()):
-        raise ValueError(
-            f"malformed meta.xml in {root}: <location> {location!r} "
-            "points outside the archive"
-        )
-    sep = _decode_sep(node.get("fieldsTerminatedBy"))
-    encoding = node.get("encoding") or "UTF-8"
-    ignore = int(node.get("ignoreHeaderLines") or 1)
-    headers = _read_headers(path, encoding, sep)
+        raise malformed(f"<location> {location!r} points outside the archive")
+    if not path.is_file():
+        raise FileNotFoundError(f"{root}: no {name} file {location!r}")
     id_node = node.find(f"{_DWC_NS}id")
     if id_node is None:
         id_node = node.find(f"{_DWC_NS}coreid")
-    id_col = headers[int(id_node.get("index"))]
-    alias = Path(location).stem
+    if id_node is None:
+        raise malformed("has neither <id> nor <coreid>")
+    # a negative index would silently pick a column counted from the end
+    index = id_node.get("index") or ""
+    if not index.strip().isdecimal():
+        key = id_node.tag.removeprefix(_DWC_NS)
+        raise malformed(f"<{key}> index {index!r} is not a column position")
     return SourceLayer(
-        alias=alias,
+        alias=Path(location).stem,
         location=location,
-        sep=sep,
-        encoding=encoding,
-        headers=headers,
-        id_col=id_col,
-        ignore_header_lines=ignore,
+        sep=_decode_sep(node.get("fieldsTerminatedBy")),
+        encoding=node.get("encoding") or "UTF-8",
+        id_index=int(index),
+        ignore_header_lines=int(node.get("ignoreHeaderLines") or 1),
     )
 
 
@@ -150,9 +146,10 @@ def parse_meta(extract_dir: str | Path) -> DwcaArchive:
             f"malformed meta.xml in {root}: no <core> element — a DwC-A "
             "declares exactly one core table"
         )
-    core = _parse_layer(core_node, root)
+    core = _parse_layer(core_node, root, "core")
     extensions = [
-        _parse_layer(ext, root) for ext in meta.findall(f"{_DWC_NS}extension")
+        _parse_layer(ext, root, f"extension {i}")
+        for i, ext in enumerate(meta.findall(f"{_DWC_NS}extension"), 1)
     ]
     return DwcaArchive(root=root, core=core, extensions=extensions)
 
@@ -206,6 +203,19 @@ def read_layer(
         .option("samplingRatio", 1.0)
         .csv(str(path))
     )
+    # Spark keeps the padding of a header such as "id, name" (" name");
+    # DuckDB and the reference's header split strip it. A padded name
+    # whose stripped form another column has too (case-insensitively, as
+    # Spark resolves names) keeps Spark's name: two equal names would
+    # make every reference to either ambiguous.
+    stripped = [c.strip() for c in df.columns]
+    folded = [c.lower() for c in stripped]
+    renames = {
+        c: new for c, new, key in zip(df.columns, stripped, folded)
+        if c != new and folded.count(key) == 1
+    }
+    if renames:
+        df = df.withColumnsRenamed(renames)
     return df.alias(layer.alias)
 
 
@@ -227,7 +237,9 @@ def read_dwca(
     scheduler pool) and job tags would not reach the inference jobs, so
     cancelling the caller's job group would not stop them. The session is
     passed so tags are inherited too. Results keep the serial order: core
-    first, then extensions in meta.xml order.
+    first, then extensions in meta.xml order. The returned descriptor's
+    layers carry their frames' column names (``headers``, ``id_col``); an
+    ``<id index>`` past a layer's last column raises ``ValueError``.
 
     ``honor_ignore_header_lines`` — see :func:`read_layer`; default False
     preserves the reference's verbatim one-header-line behavior."""
@@ -245,8 +257,17 @@ def read_dwca(
             )
             for layer in layers
         ]
-        core_df, *ext_dfs = [f.result() for f in futures]
-    return archive, core_df, ext_dfs
+        dfs = [f.result() for f in futures]
+    named = []
+    for layer, cols in zip(layers, [df.columns for df in dfs]):
+        if layer.id_index >= len(cols):
+            raise ValueError(
+                f"malformed meta.xml in {archive.root}: {layer.location} id "
+                f"index {layer.id_index} is past its {len(cols)} columns"
+            )
+        named.append(replace(layer, headers=cols, id_col=cols[layer.id_index]))
+    archive = replace(archive, core=named[0], extensions=named[1:])
+    return archive, dfs[0], dfs[1:]
 
 
 def _inheriting(spark: SparkSession, fn: Callable) -> Callable:

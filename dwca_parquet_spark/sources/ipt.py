@@ -51,6 +51,15 @@ class IptClient:
     def eml(self, resource_id: str) -> bytes:
         return self.fetch(f"{self.ipt_url}/eml.do?r={resource_id}")
 
+    def archive(self, resource_id: str, version: str) -> bytes:
+        """The DwC-A zip of one dataset version."""
+        return self.fetch(f"{self.ipt_url}/archive.do?r={resource_id}&v={version}")
+
+
+def version_from(uri: str, default: str) -> str:
+    """``N`` of a trailing ``/vN`` (RSS guid, EML packageId), else ``default``."""
+    return uri.split("/")[-1].replace("v", "") if "/" in uri else default
+
 
 def _strip_ns(tag: str) -> str:
     return tag.rsplit("}", 1)[-1]
@@ -72,8 +81,7 @@ def parse_rss(rss_xml: bytes | str) -> list[dict]:
             content[_strip_ns(child.tag)] = (child.text or "").strip()
         link = content.get("link", "")
         resource_id = link.split("=")[1] if "=" in link else link
-        guid = content.get("guid", "")
-        version = guid.split("/")[-1].replace("v", "") if "/" in guid else ""
+        version = version_from(content.get("guid", ""), "")
         out.append({**content, "id": resource_id, "version": version})
     return out
 

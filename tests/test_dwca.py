@@ -10,7 +10,8 @@ mask real semantic breaks.
 Variant coverage (FIXTURES.md §B): core-only, tab-sep, footprintWKT with
 NULLs, multi-extension fan-out, unmatched core rows (inner-join drop),
 extension-held footprintWKT (the core-only quirk), latin-1 encoding,
-colliding column names, NULL lat/lon.
+colliding column names, NULL lat/lon, quoted / BOM-prefixed / space-padded
+header lines.
 """
 
 from __future__ import annotations
@@ -306,6 +307,134 @@ def test_malformed_archive_errors(tmp_path):
         with pytest.raises(ValueError, match="outside the archive") as err:
             parse_meta(extracted3)
         assert repr(location) in str(err.value)
+
+    # a malformed layer element is named, not an AttributeError, an
+    # IndexError or a join key silently counted from the last column
+    table = "id\tname\n1\tx\n"
+    core_ok = (
+        '<core fieldsTerminatedBy="\\t"><files><location>occurrence.txt'
+        '</location></files><id index="0"/></core>'
+    )
+    cases = [
+        ("no_files", '<core><id index="0"/></core>', "",
+         ValueError, "core has no <files><location>"),
+        ("no_location", '<core><files/><id index="0"/></core>', "",
+         ValueError, "core has no <files><location>"),
+        ("missing_file",
+         '<core><files><location>absent.txt</location></files>'
+         '<id index="0"/></core>', "",
+         FileNotFoundError, "no core file 'absent.txt'"),
+        ("no_id",
+         '<core><files><location>occurrence.txt</location></files></core>',
+         "", ValueError, "core has neither <id> nor <coreid>"),
+        ("ext_no_coreid", core_ok,
+         '<extension><files><location>occurrence.txt</location></files>'
+         '</extension>',
+         ValueError, "extension 1 has neither <id> nor <coreid>"),
+        ("no_index",
+         '<core><files><location>occurrence.txt</location></files>'
+         '<id/></core>', "",
+         ValueError, "core <id> index '' is not a column position"),
+        ("ext_negative_index", core_ok,
+         '<extension><files><location>occurrence.txt</location></files>'
+         '<coreid index="-1"/></extension>',
+         ValueError, "extension 1 <coreid> index '-1' is not a column position"),
+        ("text_index",
+         '<core><files><location>occurrence.txt</location></files>'
+         '<id index="first"/></core>', "",
+         ValueError, "core <id> index 'first' is not a column position"),
+        ("negative_index",
+         '<core><files><location>occurrence.txt</location></files>'
+         '<id index="-1"/></core>', "",
+         ValueError, "core <id> index '-1' is not a column position"),
+    ]
+    for tag, core_xml, ext_xml, exc, message in cases:
+        z4 = tmp_path / f"{tag}.zip"
+        with zipfile.ZipFile(z4, "w") as zf:
+            zf.writestr(
+                "meta.xml",
+                '<?xml version="1.0"?>'
+                '<archive xmlns="http://rs.tdwg.org/dwc/text/">'
+                f"{core_xml}{ext_xml}</archive>",
+            )
+            zf.writestr("occurrence.txt", table)
+        with pytest.raises(exc, match=message):
+            parse_meta(stage_archive(z4, tmp_path / f"s4_{tag}"))
+
+
+def _rewrite_member(zpath: Path, member: str, fn) -> None:
+    """Replace the bytes of ``member`` in the zip at ``zpath`` by
+    ``fn(bytes)``."""
+    import zipfile
+
+    with zipfile.ZipFile(zpath) as zf:
+        files = {n: zf.read(n) for n in zf.namelist()}
+    files[member] = fn(files[member])
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for n, data in files.items():
+            zf.writestr(n, data)
+
+
+_HEADER_VARIANTS = {
+    "quoted": lambda h: b",".join(b'"' + c + b'"' for c in h.split(b",")),
+    "bom": lambda h: b"\xef\xbb\xbf" + h,
+    "padded": lambda h: b", ".join(h.split(b",")),
+}
+
+
+@pytest.mark.parametrize("variant", list(_HEADER_VARIANTS))
+def test_hostile_header_lines(spark, tmp_path, variant):
+    """A quoted header line, a UTF-8 BOM and a space after each separator
+    in the header line only: every variant converts with the column names
+    DuckDB parses, joins its extension on the meta.xml key and keeps the
+    point geometry."""
+    rows = FX.core_rows()
+    ext = FX.mof_extension([r["id"] for r in rows])
+    z = FX.build_archive(tmp_path, variant, rows, FX.CORE_HEADERS, extensions=[ext])
+
+    def header_only(data: bytes) -> bytes:
+        head, rest = data.split(b"\n", 1)
+        return _HEADER_VARIANTS[variant](head) + b"\n" + rest
+
+    _rewrite_member(z, "occurrence.txt", header_only)
+    archive, flat = _flatten(spark, z, tmp_path)
+    assert archive.core.headers == FX.CORE_HEADERS
+    assert archive.core.id_col == "id"
+    oracle = _duck_oracle(archive)
+    assert flat.columns == oracle[0]
+    _compare(flat, oracle, variant, ["fid", "geom", "measurementValue"])
+    assert flat.filter("geom IS NULL").count() == 0
+
+
+def test_padded_header_name_collision(spark, tmp_path):
+    """A padded header name whose stripped form another column already
+    has keeps Spark's name, so the archive still converts."""
+    headers = FX.CORE_HEADERS + ["scientificName"]
+    z = FX.build_archive(tmp_path, "collide", FX.core_rows(), headers)
+    _rewrite_member(
+        z, "occurrence.txt",
+        lambda data: data.replace(b",scientificName\n", b", SCIENTIFICNAME\n", 1),
+    )
+    archive, flat = _flatten(spark, z, tmp_path)
+    assert archive.core.headers == FX.CORE_HEADERS + [" SCIENTIFICNAME"]
+    assert flat.count() == 6
+    assert flat.filter("geom IS NULL").count() == 0
+
+
+def test_id_index_past_last_column(spark, tmp_path):
+    """An ``<id index>`` at or past the layer's column count is named once
+    the header is parsed."""
+    n_cols = len(FX.CORE_HEADERS)
+    z = FX.build_archive(tmp_path, "wide", FX.core_rows(), FX.CORE_HEADERS)
+    _rewrite_member(
+        z, "meta.xml",
+        lambda m: m.replace(b'<id index="0"/>', f'<id index="{n_cols}"/>'.encode()),
+    )
+    with pytest.raises(
+        ValueError,
+        match=f"occurrence.txt id index {n_cols} is past its {n_cols} columns",
+    ):
+        read_dwca(spark, z, tmp_path / "staging")
 
 
 def _oracle_readable(archive):
