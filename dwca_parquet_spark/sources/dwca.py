@@ -9,9 +9,11 @@ SQL string to DuckDB+zipfs; here the archive descriptor drives declarative
   separators, and the positional id/coreid join keys
   (``/root/reference/src/dwca_parquet/libs/dwca.py:8-44``).
 - Separators arrive as escaped strings ("\\t"). The id column NAME is the
-  ``<id index=…>`` position looked up in the column names of Spark's header
-  parse, the only one here (the reference also splits the header row in
-  Python, ``dwca.py:19-25``): the driver reads meta.xml alone.
+  ``<id index=…>`` position looked up in the column names of the layer's
+  one header parse (the reference also splits the header row in Python,
+  ``dwca.py:19-25``): the driver-side typing pass
+  (``csv_schema.infer_schema``) parses it with Spark's names, or Spark's
+  reader does where that pass leaves a layer to Spark.
 - Spark cannot scan inside zip archives (DuckDB used its zipfs extension,
   ``settings.py:50,59``), so the archive stages to a local directory first —
   the same cache-then-read pattern the reference uses for remote archives
@@ -26,16 +28,21 @@ import codecs
 import os
 import shutil
 import zipfile
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field, replace
 from pathlib import Path
-from typing import Callable
 from xml.etree import ElementTree
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
+from dwca_parquet_spark.sources.csv_schema import infer_schema
+
 _DWC_NS = "{http://rs.tdwg.org/dwc/text/}"
+# what one archive may extract. An IPT archive holds meta.xml, eml.xml and
+# a few layer files; the bounds stop a zip bomb from filling the staging
+# disk. The bytes are counted as they are written: a zip's size fields are
+# archive input too.
+_MAX_MEMBERS = 100_000
+_MAX_EXTRACTED_BYTES = 32 << 30
 
 
 @dataclass
@@ -44,9 +51,9 @@ class SourceLayer:
 
     Mirrors the reference's layer dict (``libs/dwca.py:8-29``): ``alias`` is
     the filename stem (used as table alias, ``dwca.py:10``), ``id_index``
-    the meta.xml ``<id>``/``<coreid>`` position (``dwca.py:24-25``). Spark's
-    header parse gives ``headers`` and ``id_col`` (the name at ``id_index``):
-    ``read_dwca`` fills them from the frame it read.
+    the meta.xml ``<id>``/``<coreid>`` position (``dwca.py:24-25``). The
+    layer's header parse gives ``headers`` and ``id_col`` (the name at
+    ``id_index``): ``read_dwca`` fills them from the frame it read.
     """
 
     alias: str
@@ -119,10 +126,42 @@ def stage_archive(source: str | Path, staging_dir: str | Path) -> Path:
     bytes arrive through ``IptClient.fetch``. The caller owns the staging
     lifecycle (reference deletes in ``finally``, ``parquet.py:52-54`` — use
     a tempfile.TemporaryDirectory context).
+
+    An archive with more than ``_MAX_MEMBERS`` members, one that extracts
+    to more than ``_MAX_EXTRACTED_BYTES`` bytes, or a member whose name
+    points outside the extraction directory is refused with a
+    ``ValueError``.
     """
     extract_dir = Path(staging_dir) / "extracted"
+    root = extract_dir.resolve()
+    budget = _MAX_EXTRACTED_BYTES
     with zipfile.ZipFile(source) as zf:
-        zf.extractall(extract_dir)
+        members = zf.infolist()
+        if len(members) > _MAX_MEMBERS:
+            raise ValueError(
+                f"{source}: {len(members)} zip members, over the limit of "
+                f"{_MAX_MEMBERS}"
+            )
+        for info in members:
+            target = (root / info.filename).resolve()
+            if not target.is_relative_to(root):
+                raise ValueError(
+                    f"{source}: zip member {info.filename!r} points outside "
+                    "the archive"
+                )
+            if info.is_dir():
+                target.mkdir(parents=True, exist_ok=True)
+                continue
+            target.parent.mkdir(parents=True, exist_ok=True)
+            with zf.open(info) as src, open(target, "wb") as out:
+                while chunk := src.read(min(1 << 20, budget + 1)):
+                    budget -= len(chunk)
+                    if budget < 0:
+                        raise ValueError(
+                            f"{source}: extracts to more than the limit of "
+                            f"{_MAX_EXTRACTED_BYTES} bytes"
+                        )
+                    out.write(chunk)
     return extract_dir
 
 
@@ -162,9 +201,16 @@ def read_layer(
 ) -> DataFrame:
     """One layer → DataFrame via spark.read.csv (reference query.sql:2,4).
 
-    samplingRatio=1.0 mirrors DuckDB's ``sample_size=-1`` full-table sniff
-    on extensions. Multi-char separators are supported by Spark ≥3.0 so the
-    decoded meta.xml separator passes straight through.
+    Every cell is typed, as DuckDB's ``sample_size=-1`` sniff types every
+    extension row, with Spark's CSV inference rules. The staged file is on
+    the driver's disk, so ``csv_schema.infer_schema`` types it there with
+    no Spark job and the reader gets its schema. Where that pass cannot
+    decide a file exactly (a multi-char separator, a row of another width,
+    a backslash, a quote inside a quoted cell, an empty or repeated header
+    name, …) the same reader runs without a schema and Spark's
+    ``inferSchema`` pass (``samplingRatio=1.0``) types it instead. Spark ≥3.0
+    reads multi-char separators, so the decoded meta.xml separator passes
+    straight through.
 
     ``honor_ignore_header_lines``: meta.xml can declare
     ``ignoreHeaderLines > 1`` (header plus N-1 comment/unit lines). The
@@ -194,15 +240,19 @@ def read_layer(
             shutil.copyfileobj(src, out)
         os.replace(tmp, trimmed)
         path = trimmed
-    df = (
-        spark.read.option("header", True)
-        .option("sep", layer.sep)
-        .option("encoding", layer.encoding)
-        .option("multiLine", False)
-        .option("inferSchema", True)
-        .option("samplingRatio", 1.0)
-        .csv(str(path))
-    )
+    options = {
+        "header": "true",
+        "sep": layer.sep,
+        "encoding": layer.encoding,
+        "multiLine": "false",
+        "inferSchema": "true",
+        "samplingRatio": "1.0",
+    }
+    reader = spark.read.options(**options)
+    schema = infer_schema(spark, path, options)
+    if schema is not None:
+        reader = reader.schema(schema)
+    df = reader.csv(str(path))
     # Spark keeps the padding of a header such as "id, name" (" name");
     # DuckDB and the reference's header split strip it. A padded name
     # whose stripped form another column has too (case-insensitively, as
@@ -227,17 +277,11 @@ def read_dwca(
 ) -> tuple[DwcaArchive, DataFrame, list[DataFrame]]:
     """Full archive → (descriptor, core DataFrame, extension DataFrames).
 
-    Layers are read concurrently, one pool thread per layer in the archive
-    (so no pool-size setting): Spark's CSV reader runs two jobs per layer before it returns (a header ``take(1)`` and
-    the full-sample inference pass), and the layers are independent, so
-    their jobs share the cluster instead of queueing one layer after
-    another. Each thread target is wrapped with
-    ``inheritable_thread_target(spark)``: a pool thread is a fresh JVM
-    thread, and without the wrap the caller's local properties (job group,
-    scheduler pool) and job tags would not reach the inference jobs, so
-    cancelling the caller's job group would not stop them. The session is
-    passed so tags are inherited too. Results keep the serial order: core
-    first, then extensions in meta.xml order. The returned descriptor's
+    Stages the archive, parses meta.xml and reads the layers one after
+    another with :func:`read_layer`: core first, then extensions in
+    meta.xml order. A layer typed on the driver runs no Spark job here;
+    one left to Spark's inference runs its jobs on the calling thread, so
+    they carry the caller's job group and tags. The returned descriptor's
     layers carry their frames' column names (``headers``, ``id_col``); an
     ``<id index>`` past a layer's last column raises ``ValueError``.
 
@@ -246,18 +290,10 @@ def read_dwca(
     extract_dir = stage_archive(source, staging_dir)
     archive = parse_meta(extract_dir)
     layers = [archive.core, *archive.extensions]
-    with ThreadPoolExecutor(max_workers=len(layers)) as pool:
-        # one wrap per layer: a wrap clones the caller's local properties
-        # once, and threads given the same clone would overwrite each
-        # other's per-query properties (e.g. spark.sql.execution.id)
-        futures = [
-            pool.submit(
-                _inheriting(spark, read_layer),
-                spark, archive, layer, honor_ignore_header_lines,
-            )
-            for layer in layers
-        ]
-        dfs = [f.result() for f in futures]
+    dfs = [
+        read_layer(spark, archive, layer, honor_ignore_header_lines)
+        for layer in layers
+    ]
     named = []
     for layer, cols in zip(layers, [df.columns for df in dfs]):
         if layer.id_index >= len(cols):
@@ -268,12 +304,3 @@ def read_dwca(
         named.append(replace(layer, headers=cols, id_col=cols[layer.id_index]))
     archive = replace(archive, core=named[0], extensions=named[1:])
     return archive, dfs[0], dfs[1:]
-
-
-def _inheriting(spark: SparkSession, fn: Callable) -> Callable:
-    """``fn`` wrapped to run with the calling thread's Spark local
-    properties and job tags (captured now, applied in the thread)."""
-    wrap = inheritable_thread_target(spark)
-    # without pinned threads (PYSPARK_PIN_THREAD=false) PySpark has no
-    # per-thread properties to carry and hands the session back as is
-    return fn if wrap is spark else wrap(fn)

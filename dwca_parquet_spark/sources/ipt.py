@@ -26,12 +26,15 @@ data path is the DwC-A archives those datasets point at.
 
 from __future__ import annotations
 
+import re
 import urllib.request
 import xml.etree.ElementTree as ET
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 Fetch = Callable[[str], bytes]
+
+_VERSION = re.compile(r"v(\d+(?:\.\d+)*)", re.ASCII)
 
 
 def _default_fetch(url: str) -> bytes:
@@ -57,8 +60,13 @@ class IptClient:
 
 
 def version_from(uri: str, default: str) -> str:
-    """``N`` of a trailing ``/vN`` (RSS guid, EML packageId), else ``default``."""
-    return uri.split("/")[-1].replace("v", "") if "/" in uri else default
+    """``N`` of a trailing ``/vN`` (RSS guid, EML packageId; ``N`` is dotted
+    digits such as ``12`` or ``1.2``), else ``default``. The version names
+    the versioned file and the archive fetch, so any other last segment
+    (``doi:10.15468/dl.vx2x9k``, ``resource?r=vascular_plants``) is no
+    version."""
+    m = _VERSION.fullmatch(uri.rsplit("/", 1)[-1]) if "/" in uri else None
+    return m[1] if m else default
 
 
 def _strip_ns(tag: str) -> str:

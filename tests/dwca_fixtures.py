@@ -171,7 +171,7 @@ def multimedia_extension(core_ids: list[int]) -> dict:
 
 def in_job_group(spark, group: str, fn):
     """Run ``fn`` under Spark job group ``group``; return its result and the
-    group's job ids (the Spark jobs the call made, pool threads included)."""
+    group's job ids (the Spark jobs the call made)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:

@@ -23,7 +23,7 @@ from dwca_parquet_spark.plans.geoapi import (
 )
 from dwca_parquet_spark.sinks.jsonarray import write_json_array
 from dwca_parquet_spark.sinks.parquet import write_parquet
-from dwca_parquet_spark.sources.ipt import IptClient, parse_eml, parse_rss
+from dwca_parquet_spark.sources.ipt import IptClient, parse_eml, parse_rss, version_from
 
 RSS = b"""<?xml version="1.0" encoding="UTF-8"?>
 <rss version="2.0">
@@ -126,6 +126,23 @@ def test_parse_rss():
     assert [d["id"] for d in ds] == ["birds", "moths"]
     assert [d["version"] for d in ds] == ["1.7", "3"]
     assert ds[0]["title"] == "Bird occurrences"
+
+
+@pytest.mark.parametrize(
+    "uri, version",
+    [
+        ("doi:10.15468/dl.vx2x9k", "default"),
+        ("https://ipt.test.org/resource?r=vascular_plants", "default"),
+        ("https://ipt.test.org/resource?r=birds/v12", "12"),
+        ("doi:10.1/birds/v1.2", "1.2"),
+        ("doi:10.1/birds/v", "default"),
+        ("doi:10.1/birds/v1.", "default"),
+    ],
+)
+def test_version_from_accepts_only_trailing_vn(uri, version):
+    """Only a last ``/`` segment ``v`` + dotted digits is a version: any
+    other would name the versioned file and the archive fetch."""
+    assert version_from(uri, "default") == version
 
 
 def test_parse_eml_shape():

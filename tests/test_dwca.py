@@ -11,17 +11,21 @@ Variant coverage (FIXTURES.md §B): core-only, tab-sep, footprintWKT with
 NULLs, multi-extension fan-out, unmatched core rows (inner-join drop),
 extension-held footprintWKT (the core-only quirk), latin-1 encoding,
 colliding column names, NULL lat/lon, quoted / BOM-prefixed / space-padded
-header lines.
+header lines. Layers typed on the driver are checked against Spark's own
+inference of the same archive; zip bombs against the staging bounds.
 """
 
 from __future__ import annotations
 
+import re
 from pathlib import Path
 
 import duckdb
 import pytest
 
 from dwca_parquet_spark.plans.flatten import dwca_flatten
+from dwca_parquet_spark.sources import dwca
+from dwca_parquet_spark.sources.csv_schema import infer_schema
 from dwca_parquet_spark.sources.dwca import read_dwca, read_layer
 from tests import dwca_fixtures as FX
 
@@ -200,10 +204,31 @@ def test_colliding_columns_renamed(spark, tmp_path):
     assert spark.read.parquet(str(out)).count() == 6
 
 
-def test_read_dwca_concurrent_inference_parity(spark, tmp_path):
-    """Layers inferred on pool threads get the same schemas, in the same
-    order, as serial ``read_layer`` calls; their Spark jobs run under the
-    caller's job group (pool threads inherit its local properties)."""
+def _spark_inferred(monkeypatch, fn):
+    """``fn()`` with every layer left to Spark's ``inferSchema`` pass: the
+    same reader call, without the driver-side schema."""
+    with monkeypatch.context() as m:
+        m.setattr(dwca, "infer_schema", lambda *args: None)
+        return fn()
+
+
+def _driver_typed(monkeypatch) -> dict[str, bool]:
+    """Record, per layer file name, whether the driver typed it."""
+    typed = {}
+
+    def spy(spark, path, options):
+        schema = infer_schema(spark, path, options)
+        typed[path.name] = schema is not None
+        return schema
+
+    monkeypatch.setattr(dwca, "infer_schema", spy)
+    return typed
+
+
+def test_read_dwca_driver_inference_parity(spark, tmp_path, monkeypatch):
+    """Layers typed on the driver get Spark's ``inferSchema`` names and
+    dtypes, in the serial order, and run no Spark job in the caller's job
+    group."""
     rows = FX.core_rows()
     rows[0]["scientificName"] = "Ærø señor"
     collide = {
@@ -221,18 +246,52 @@ def test_read_dwca_concurrent_inference_parity(spark, tmp_path):
         tmp_path, "v_par", rows, FX.CORE_HEADERS,
         extensions=[mof, collide], core_sep="\t", core_enc="ISO-8859-1",
     )
+    typed = _driver_typed(monkeypatch)
     (archive, core_df, ext_dfs), jobs = FX.in_job_group(
-        spark, "dwca-concurrent-inference",
+        spark, "dwca-driver-inference",
         lambda: read_dwca(spark, z, tmp_path / "staging"),
     )
+    assert typed == dict.fromkeys(
+        ["occurrence.txt", "measurementorfact.txt", "multimedia.txt"], True
+    )
+    assert jobs == []
     layers = [archive.core, *archive.extensions]
     aliases = [ly.alias for ly in layers]
     assert aliases == ["occurrence", "measurementorfact", "multimedia"]
-    serial = [read_layer(spark, archive, ly) for ly in layers]
+    serial = _spark_inferred(
+        monkeypatch, lambda: [read_layer(spark, archive, ly) for ly in layers]
+    )
     assert [df.dtypes for df in [core_df, *ext_dfs]] == [df.dtypes for df in serial]
     assert dict(ext_dfs[1].dtypes)["individualCount"] == "double"
-    assert len(jobs) >= 2 * len(layers)  # header take(1) + inference, per layer
     assert core_df.filter("scientificName = 'Ærø señor'").count() == 1
+
+
+@pytest.mark.parametrize("case", ["multi_char_sep", "junk_line"])
+def test_read_dwca_spark_inference_fallback(spark, tmp_path, monkeypatch, case):
+    """A ``~~`` separator is left to Spark's inference; a verbatim
+    ``ignoreHeaderLines=2`` archive, whose junk line is one more data row,
+    is typed on the driver. Both get Spark's dtypes."""
+    rows = FX.core_rows()
+    mof = FX.mof_extension([r["id"] for r in rows])
+    kw = {}
+    if case == "multi_char_sep":
+        mof["sep"] = "~~"
+    else:
+        kw = {"ignore_header_lines": 2, "junk_lines": ["#units"]}
+    z = FX.build_archive(tmp_path, case, rows, FX.CORE_HEADERS, extensions=[mof], **kw)
+    typed = _driver_typed(monkeypatch)
+    archive, core_df, ext_dfs = read_dwca(spark, z, tmp_path / "staging")
+    assert typed == {
+        "occurrence.txt": True, "measurementorfact.txt": case == "junk_line"
+    }
+    _, spark_core, spark_exts = _spark_inferred(
+        monkeypatch, lambda: read_dwca(spark, z, tmp_path / "spark")
+    )
+    assert [df.dtypes for df in [core_df, *ext_dfs]] == [
+        df.dtypes for df in [spark_core, *spark_exts]
+    ]
+    if case == "junk_line":
+        assert dict(core_df.dtypes)["id"] == "string"
 
 
 def test_null_latlon_geom_null(spark, tmp_path):
@@ -437,6 +496,40 @@ def test_id_index_past_last_column(spark, tmp_path):
         read_dwca(spark, z, tmp_path / "staging")
 
 
+@pytest.mark.parametrize("case", ["bytes", "members", "outside"])
+def test_stage_archive_bounds(tmp_path, monkeypatch, case):
+    """A zip bomb is refused with the limit it broke: the extracted bytes,
+    counted as they are written, or the member count. A member named
+    outside the extraction directory is refused too; an archive inside the
+    bounds extracts."""
+    import zipfile
+
+    from dwca_parquet_spark.sources.dwca import parse_meta, stage_archive
+
+    monkeypatch.setattr(dwca, "_MAX_EXTRACTED_BYTES", 1 << 20)
+    monkeypatch.setattr(dwca, "_MAX_MEMBERS", 3)
+    ok = FX.build_archive(tmp_path, "ok", FX.core_rows(), FX.CORE_HEADERS)
+    assert parse_meta(stage_archive(ok, tmp_path / "ok")).core.alias == "occurrence"
+    z = tmp_path / f"{case}.zip"
+    with zipfile.ZipFile(z, "w", zipfile.ZIP_DEFLATED) as zf:
+        zf.writestr("meta.xml", "<archive/>")
+        if case == "members":
+            for i in range(3):
+                zf.writestr(f"part{i}.txt", "1")
+        elif case == "outside":
+            zf.writestr("../escaped.txt", "1")
+        else:
+            zf.writestr("occurrence.txt", b"0" * (2 << 20))
+    message = {
+        "bytes": "extracts to more than the limit of 1048576 bytes",
+        "members": "4 zip members, over the limit of 3",
+        "outside": "zip member '../escaped.txt' points outside the archive",
+    }[case]
+    with pytest.raises(ValueError, match=re.escape(message)):
+        stage_archive(z, tmp_path / "staging")
+    assert not (tmp_path / "escaped.txt").exists()
+
+
 def _oracle_readable(archive):
     """DuckDB's read_csv caps delim at ONE byte; Spark reads multi-char
     separators natively. For any multi-byte-sep layer, write a
@@ -600,3 +693,80 @@ def test_hostile_archive_matrix(spark, tmp_path):
                 flat2, _duck_oracle_honored(_oracle_readable(archive2)),
                 f"honored {case}", cols,
             )
+
+
+def _matrix_archives(tmp_path):
+    """The archives of ``test_hostile_archive_matrix``: (case, zip path,
+    ignoreHeaderLines)."""
+    import itertools
+
+    for n, (enc, sep, matched, ihl, collide) in enumerate(itertools.product(
+        ("UTF-8", "ISO-8859-1"), (",", "\t", "~~"), (True, False), (1, 2),
+        (False, True),
+    )):
+        rows = FX.core_rows(6)
+        rows[0]["scientificName"] = "Ærø señor"
+        ext = FX.mof_extension([1, 2, 3, 4, 5, 6] if matched else [1, 3, 5])
+        if collide:
+            ext["headers"] = ext["headers"] + ["eventDate"]
+            for i, r in enumerate(ext["rows"]):
+                r["eventDate"] = f"1999-01-{i + 1:02d}"
+        if not matched:
+            ext["rows"].append(
+                {"coreid": 99, "measurementType": "t", "measurementValue": "0"}
+            )
+        ext["sep"], ext["enc"] = sep, enc
+        z = FX.build_archive(
+            tmp_path, f"m{n}", rows, FX.CORE_HEADERS,
+            extensions=[ext], core_sep=sep, core_enc=enc,
+            ignore_header_lines=ihl,
+            junk_lines=["#junk-comment-line"] if ihl == 2 else None,
+        )
+        yield f"enc={enc} sep={sep!r} matched={matched} ihl={ihl} collide={collide}", z, ihl
+
+
+def _dtypes(spark, z, staging, **kw):
+    _, core_df, ext_dfs = read_dwca(spark, z, staging, **kw)
+    return [df.dtypes for df in [core_df, *ext_dfs]]
+
+
+@pytest.mark.slow
+def test_hostile_archive_matrix_spark_dtypes(spark, tmp_path, monkeypatch):
+    """Every hostile-matrix archive, in verbatim and (for
+    ignoreHeaderLines=2) honored mode, reads with the names and dtypes of
+    Spark's own inference; only the multi-char separator is left to it."""
+    typed = _driver_typed(monkeypatch)
+    for case, z, ihl in _matrix_archives(tmp_path):
+        for honor in (False, True) if ihl == 2 else (False,):
+            kw = {"honor_ignore_header_lines": honor}
+            tag, staging = f"{case} honor={honor}", f"{z.stem}_{honor}"
+            typed.clear()
+            got = _dtypes(spark, z, tmp_path / "s" / staging, **kw)
+            assert all(typed.values()) == ("'~~'" not in case), (tag, typed)
+            want = _spark_inferred(
+                monkeypatch, lambda: _dtypes(spark, z, tmp_path / "o" / staging, **kw)
+            )
+            assert got == want, tag
+
+
+def test_service_mix_shapes_spark_dtypes(spark, tmp_path, monkeypatch):
+    """The benchmark's ``service_mix`` archive shapes are all typed on the
+    driver, with the names and dtypes of Spark's own inference (late
+    ``123+`` and ``n/a`` cells included)."""
+    from dataclasses import replace
+
+    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parents[1] / "perfbench"))
+    import gen
+    import service_load
+
+    typed = _driver_typed(monkeypatch)
+    for seed, (shape, spec) in enumerate(service_load.SHAPES.items()):
+        z = tmp_path / f"{shape}.zip"
+        gen.write_archive(z, replace(spec, n_core=service_load.ARCHIVE_ROWS), seed)
+        typed.clear()
+        got = _dtypes(spark, z, tmp_path / "s" / shape)
+        assert typed and all(typed.values()), (shape, typed)
+        want = _spark_inferred(
+            monkeypatch, lambda: _dtypes(spark, z, tmp_path / "o" / shape)
+        )
+        assert got == want, shape
