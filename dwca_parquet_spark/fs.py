@@ -13,14 +13,33 @@ works for ``/local/path``, ``file:///...``, ``hdfs://...``, and
 ``s3a://...`` (given the usual hadoop-aws jars on a real cluster). Local
 paths and ``file://`` URIs exercise the exact same code path in tests.
 
-Design notes for 100 TB:
-- ``rename`` on S3A is a server-side copy+delete (not atomic, O(bytes)); the
-  single-file commit-rename contract is therefore only offered for
-  catalog-sized outputs — bulk data uses the normal committer's directory
-  layout where Spark's own S3A-optimized committers apply.
-- ``copy`` for the versioned→latest alias uses Hadoop ``FileUtil.copy``,
-  which is a stream copy on the cluster-side filesystem — never through the
-  driver's disk.
+Design notes: how a published file replaces its predecessor.
+:func:`commit_single_file` is the one place that decides it. The new file
+is written under a hidden staging directory next to the target (its name
+starts with ``.``, which Spark's and Hadoop's listings skip), and
+:meth:`FS.replace` then puts it at the target. The target is never deleted
+first and never opened for writing, so a crash leaves the previous file
+whole plus hidden residue that the next publish of the same target clears.
+What ``replace`` promises depends on the scheme:
+- local (``file:``, Hadoop's checksummed ``LocalFileSystem``): one
+  ``rename(2)`` on the raw filesystem, so a reader sees the old file or
+  the new one, never neither. The checked FS refuses to rename onto an
+  existing file, and a raw rename would leave the old ``.crc`` beside the
+  new bytes (a checksummed read then fails). So the target's ``.crc`` is
+  removed before the data rename and the new one is moved into place after
+  it; in between, reads skip verification;
+- HDFS and every other scheme: ``FileContext.rename`` with
+  ``Options.Rename.OVERWRITE``, which is atomic on HDFS;
+- S3A: no rename is atomic there. ``rename`` is a server-side copy plus
+  delete, O(bytes), and ``OVERWRITE`` deletes the target first; an object
+  appears whole only through its own PUT. A reader can see the target
+  missing while it is replaced. Ordering still holds: callers commit the
+  file their idempotency probe checks last (see
+  ``sinks.parquet.write_versioned``), so an interrupted publish is redone
+  by the next request. Bulk data uses Spark's committers and directory
+  layouts, not this path.
+``copy`` (``FileUtil.copy``) is a stream copy on the cluster-side
+filesystem, never through the driver's disk.
 
 It also owns the one versioned-state format every incremental fold uses
 (streaming states, graph totals, PageRank): the newest complete ``v<N>``
@@ -38,6 +57,8 @@ import re
 from pathlib import Path
 from typing import TYPE_CHECKING, Callable
 
+from py4j.java_gateway import JavaClass, is_instance_of
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import SparkSession
 
@@ -54,6 +75,11 @@ def has_scheme(path: str) -> bool:
     )
 
 
+# Hadoop's checksummed local filesystem: the ``file:`` default and its
+# subclasses (with Hive on the classpath, ``ProxyLocalFileSystem``).
+_LOCAL_FS = "org.apache.hadoop.fs.LocalFileSystem"
+
+
 class FS:
     """Hadoop FileSystem bound to one path's scheme+authority.
 
@@ -63,12 +89,18 @@ class FS:
     """
 
     def __init__(self, spark: "SparkSession", path: str | Path):
-        self._jvm = spark._jvm
+        self._gateway = spark.sparkContext._gateway
         self._conf = spark._jsc.hadoopConfiguration()
+        # a class by its full name costs no py4j call, where a walk down
+        # ``spark._jvm`` costs one per package
+        self._path_class = self._jclass("org.apache.hadoop.fs.Path")
         self._fs = self._jpath(path).getFileSystem(self._conf)
 
+    def _jclass(self, name: str) -> JavaClass:
+        return JavaClass(name, self._gateway._gateway_client)
+
     def _jpath(self, p: str | Path):
-        return self._jvm.org.apache.hadoop.fs.Path(str(p))
+        return self._path_class(str(p))
 
     def exists(self, p: str | Path) -> bool:
         return bool(self._fs.exists(self._jpath(p)))
@@ -93,10 +125,38 @@ class FS:
         if not self._fs.rename(self._jpath(src), self._jpath(dst)):
             raise IOError(f"rename failed: {src} -> {dst}")
 
+    def replace(self, src: str | Path, dst: str | Path) -> None:
+        """Put the file ``src`` at ``dst`` in one replace step, over any
+        file there; never deletes ``dst`` first (module docstring: the
+        promise per scheme)."""
+        s, d = self._jpath(src), self._jpath(dst)
+        if is_instance_of(self._gateway, self._fs, _LOCAL_FS):
+            raw = self._fs.getRawFileSystem()
+            s_crc, d_crc = self._fs.getChecksumFile(s), self._fs.getChecksumFile(d)
+            raw.delete(d_crc, False)
+            if not raw.rename(s, d):
+                raise IOError(f"replace failed: {src} -> {dst}")
+            if raw.exists(s_crc):
+                raw.rename(s_crc, d_crc)
+            return
+        rename = self._jclass("org.apache.hadoop.fs.Options$Rename")
+        overwrite = self._gateway.new_array(rename, 1)
+        overwrite[0] = rename.OVERWRITE
+        context = self._jclass("org.apache.hadoop.fs.FileContext")
+        context.getFileContext(self._fs.getUri(), self._conf).rename(s, d, overwrite)
+
+    def write_bytes(self, p: str | Path, data: bytes) -> None:
+        """Create the file ``p`` holding ``data`` (overwriting a file there)."""
+        out = self._fs.create(self._jpath(p), True)
+        try:
+            out.write(data)
+        finally:
+            out.close()
+
     def copy(self, src: str | Path, dst: str | Path) -> None:
         """Stream-copy src to dst on the filesystem side (FileUtil.copy),
         overwriting dst. Works file→file and dir→dir."""
-        ok = self._jvm.org.apache.hadoop.fs.FileUtil.copy(
+        ok = self._jclass("org.apache.hadoop.fs.FileUtil").copy(
             self._fs, self._jpath(src), self._fs, self._jpath(dst),
             False, True, self._conf,
         )
@@ -125,16 +185,6 @@ class FS:
         )
 
 
-def parent(path: str | Path) -> str:
-    """Parent of a path string, URI-safe (no pathlib scheme mangling)."""
-    s = str(path).rstrip("/")
-    if has_scheme(s):
-        scheme, _, rest = s.partition("://")
-        base, _, _ = rest.rpartition("/")
-        return f"{scheme}://{base}"
-    return str(Path(s).parent)
-
-
 def to_local(path: str | Path) -> Path | None:
     """Local pathlib.Path for a plain path or file: URI; None otherwise."""
     s = str(path)
@@ -148,23 +198,35 @@ def to_local(path: str | Path) -> Path | None:
     return None
 
 
+def hidden(path: str | Path, suffix: str = "") -> str:
+    """The hidden sibling ``{parent}/.{name}{suffix}`` of ``path``: a name
+    Spark's and Hadoop's listings skip, on the same filesystem."""
+    head, sep, name = str(path).rstrip("/").rpartition("/")
+    return f"{head}{sep}.{name}{suffix}"
+
+
 def commit_single_file(
     spark: "SparkSession", path: str | Path, write: Callable[[str], None]
 ) -> str:
-    """Commit one file at ``path``: ``write(tmp)`` must leave exactly one
-    ``part-*`` file in the ``tmp`` directory (a ``coalesce(1)`` write); it
-    replaces any previous file at ``path`` by rename."""
+    """Publish one file at ``path``; the one way a published file replaces
+    the file before it. ``write(tmp)`` must leave exactly one ``part-*``
+    file in the directory ``tmp``: a ``coalesce(1)`` Spark write, or one
+    file the caller writes at ``{tmp}/part-0``. ``tmp`` is a hidden
+    sibling of ``path``, cleared first (a crashed publish's residue);
+    :meth:`FS.replace` then puts the part file at ``path`` in one step, so
+    ``path`` is never deleted, never opened for writing, and never missing
+    (on S3A, see the module docstring). One writer per ``path`` at a time:
+    the staging name is fixed so the next publish clears a crash's
+    residue."""
     path = str(path)
     fs = FS(spark, path)
-    tmp = path + ".tmp.dir"
+    tmp = hidden(path, ".tmp")
+    fs.delete(tmp)
     write(tmp)
     parts = [p for p in fs.glob(tmp + "/part-*") if not p.endswith(".crc")]
     if len(parts) != 1:
         raise IOError(f"expected one part file in {tmp}, found {parts}")
-    fs.mkdirs(parent(path))
-    if fs.exists(path):
-        fs.delete(path)
-    fs.rename(parts[0], path)
+    fs.replace(parts[0], path)
     fs.delete(tmp)
     return path
 

@@ -9,10 +9,11 @@ routing table is one line per route, exactly as service.py promised:
     POST /api/v1/resources/csw        → ResourceService.generate_csw
     POST /api/v1/resources/geoapi     → ResourceService.generate_geoapi
 
-Responses are JSON; unknown routes 404, handler errors 500 with the error
-message. ThreadingHTTPServer keeps the server responsive while the
-service's JobQueue executes conversions on its worker thread — the same
-enqueue-and-return contract as the reference's RQ. A production
+Responses are JSON; an invalid resource id 400, unknown routes 404,
+handler errors 500 with the error message. ThreadingHTTPServer keeps the
+server responsive while the service's JobQueue executes conversions on
+its worker thread — the same enqueue-and-return contract as the
+reference's RQ. A production
 deployment fronts the same service object with any ASGI framework; this
 module exists so the full request → enqueue → Spark-job → parquet flow is
 runnable and tested end-to-end here.
@@ -24,7 +25,7 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from dwca_parquet_spark.service import ResourceService
+from dwca_parquet_spark.service import InvalidResourceId, ResourceService
 
 API_PREFIX = "/api/v1"
 
@@ -50,6 +51,8 @@ def _make_handler(service: ResourceService):
                     rid = path.rsplit("/", 1)[1]
                     try:
                         self._send(200, service.get_resource(rid))
+                    except InvalidResourceId as exc:
+                        self._send(400, {"detail": str(exc)})
                     except KeyError:
                         self._send(404, {"detail": f"unknown resource: {rid}"})
                 elif method == "POST" and path == f"{API_PREFIX}/resources/csw":

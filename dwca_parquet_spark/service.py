@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import itertools
 import queue as _queue
+import re
 import tempfile
 import threading
 import traceback
@@ -63,6 +64,15 @@ from dwca_parquet_spark.sinks.parquet import (
 )
 from dwca_parquet_spark.sources.dwca import read_dwca
 from dwca_parquet_spark.sources.ipt import IptClient, parse_eml, version_from
+
+
+# An IPT resource shortname: letters, digits, ``_`` and ``-``. Nothing
+# else may reach ``eml.do?r={id}`` or ``versioned_paths``.
+_RESOURCE_ID = re.compile(r"[A-Za-z0-9_-]+", re.ASCII)
+
+
+class InvalidResourceId(ValueError):
+    """A resource id outside the IPT shortname form (HTTP 400)."""
 
 
 @dataclass
@@ -171,7 +181,11 @@ def job_version_to_parquet(
     costs one metadata call and no fetch, staging, Spark job or plan. Only
     a first-seen version fetches and stages the archive (``:35-42``).
     ``write_versioned`` keeps its own guard, which also covers a version
-    written between the probe and the write. The reference's fixes are
+    written between the probe and the write. The probe is enough because
+    the versioned file is committed last: ``write_versioned`` publishes the
+    latest alias before it, so an existing versioned file means the alias
+    was published too, and a crash before that commit leaves nothing for
+    the probe to find. The reference's fixes are
     applied: the plan executes once (write + fs copy, not two executions),
     and the archive bytes go through the client's injectable fetch
     (mockable, same staging lifecycle — the cache zip is deleted in
@@ -224,6 +238,10 @@ class ResourceService:
 
     # GET /resources/{id}  (reference resources.py:45-75)
     def get_resource(self, resource_id: str) -> dict:
+        """Raises InvalidResourceId (a ValueError) for an id outside the IPT
+        shortname form, before it reaches an IPT URL or a store path."""
+        if not _RESOURCE_ID.fullmatch(resource_id):
+            raise InvalidResourceId(f"invalid resource id: {resource_id!r}")
         ipt = self.cfg.catalog.ipt_url
         meta = parse_eml(self.client.eml(resource_id))
         # reference: packageId "doi:…/vN" → version (resources.py:56-59)

@@ -16,8 +16,10 @@ GeoParquet footer metadata, so (SURVEY §4.3) the sink:
    writer or a custom committer instead, noted here deliberately).
 
 Every part file is staged through the path's own Hadoop FileSystem
-(``copyToLocalFile`` → pyarrow rewrite → ``copyFromLocalFile``), so the
-same sink serves plain paths, ``file://``, ``hdfs://`` and ``s3a://`` URIs,
+(``copyToLocalFile`` → pyarrow rewrite → ``copyFromLocalFile`` into the
+hidden staging of ``fs.commit_single_file``, which then replaces the part
+in one step; a reader never sees a half-rewritten part), so the same sink
+serves plain paths, ``file://``, ``hdfs://`` and ``s3a://`` URIs,
 and a plain path resolves against ``fs.defaultFS`` like every other sink
 write — the staging round-trip is FS-side streaming, bounded by the
 catalog-sized outputs this pass is documented for.
@@ -36,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dwca_parquet_spark.functions.geometry import geometry_type, wkt_to_wkb
-from dwca_parquet_spark.fs import FS
+from dwca_parquet_spark.fs import FS, commit_single_file
 from dwca_parquet_spark.sinks.parquet import COMPRESSION, write_parquet
 
 GEOM_COL = "geom"  # the WKT column dwca_flatten emits
@@ -132,16 +134,19 @@ def write_geoparquet(
 
     out = df.withColumn(GEOM_COL, wkt_to_wkb(F.col(GEOM_COL)))
     written = write_parquet(out, path, single_file=single_file)
-    fs = FS(df.sparkSession, written)
+    spark = df.sparkSession
+    fs = FS(spark, written)
     parts = (
         [written]
         if fs.is_file(written)
         else fs.glob(f"{written.rstrip('/')}/*.parquet")
     )
-    with tempfile.TemporaryDirectory(prefix="geoparquet_meta_") as tmp:
+    with tempfile.TemporaryDirectory(prefix="geoparquet_meta_") as local:
         for i, part in enumerate(parts):
-            staged = Path(tmp) / f"part_{i}.parquet"
+            staged = Path(local) / f"part_{i}.parquet"
             fs.copy_to_local(part, staged)
             _inject_geo_metadata(staged, geo)
-            fs.copy_from_local(staged, part)
+            commit_single_file(
+                spark, part, lambda tmp: fs.copy_from_local(staged, f"{tmp}/part-0")
+            )
     return written

@@ -7,9 +7,10 @@ writer emits JSONL directories, so for byte parity the rows serialize via
 collect for the single-file write — acceptable because this sink exists for
 catalog/config outputs (hundreds of rows), never bulk data.
 
-The file itself is written through the path's own Hadoop FileSystem (see
-``dwca_parquet_spark.fs``), so ``s3a://…`` catalog outputs work exactly
-like the reference's S3 COPY target; local paths behave as before.
+The file itself is written through the path's own Hadoop FileSystem and
+published by ``fs.commit_single_file`` (staged, then one replace step), so
+``s3a://…`` catalog outputs work like the reference's S3 COPY target and a
+reader never sees a half-written array.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dwca_parquet_spark.fs import FS, parent
+from dwca_parquet_spark.fs import FS, commit_single_file
 
 
 def write_json_array(
@@ -45,10 +46,6 @@ def write_json_array(
     payload = ("[\n" + body + "\n]\n").encode("utf-8")
 
     fs = FS(df.sparkSession, path)
-    fs.mkdirs(parent(path))
-    out = fs._fs.create(fs._jpath(path), True)
-    try:
-        out.write(payload)
-    finally:
-        out.close()
-    return path
+    return commit_single_file(
+        df.sparkSession, path, lambda tmp: fs.write_bytes(f"{tmp}/part-0", payload)
+    )

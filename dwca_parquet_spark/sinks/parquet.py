@@ -9,13 +9,16 @@ Reference behavior (``/root/reference/src/dwca_parquet/libs/parquet.py:24-51``):
 - (anti-pattern) the query EXECUTES TWICE, once per output.
 
 Here: write once, then filesystem-side copy to the latest alias — the
-documented fix from SURVEY §4.1. All path handling goes through
-``dwca_parquet_spark.fs.FS`` (Hadoop FileSystem resolved from the path's
-scheme), so local paths, ``file://``, ``hdfs://`` and ``s3a://`` URIs all
-take the same code path; nothing touches the driver's local disk.
+documented fix from SURVEY §4.1. Every file lands through
+``fs.commit_single_file`` / ``FS.replace`` (staged hidden sibling, one
+replace step), and the versioned file is committed after the alias. All
+path handling goes through ``dwca_parquet_spark.fs.FS`` (Hadoop
+FileSystem resolved from the path's scheme), so local paths, ``file://``,
+``hdfs://`` and ``s3a://`` URIs all take the same code path; nothing
+touches the driver's local disk.
 
 ``single_file=True`` reproduces the reference's one-file layout
-(coalesce(1) + commit-rename) for small/medium outputs; directory layout is
+(coalesce(1) + publish) for small/medium outputs; directory layout is
 the default for bulk data, where rename-based commits give way to Spark's
 committer.
 """
@@ -26,7 +29,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame
 
-from dwca_parquet_spark.fs import FS, commit_single_file
+from dwca_parquet_spark.fs import FS, commit_single_file, hidden
 
 # The one output codec of every parquet write that sets one: the reference
 # publishes zstd parquet (``libs/parquet.py:48``).
@@ -79,15 +82,22 @@ def write_versioned(
     (``:48-51``) with write-once + filesystem-side copy. The existence
     probe runs on the path's own filesystem (S3 object probe on a real
     deployment), matching the reference's fsspec ``exists`` semantics.
+
+    The versioned file is the commit point, so it is published last: the
+    plan is written once to a hidden staged sibling, the latest alias is
+    published from that copy, and only then is the staged file renamed to
+    ``v{ver}.parquet``. A crash anywhere before that rename leaves no
+    versioned file, so the next request redoes the whole conversion
+    instead of skipping it with the alias missing or stale.
     """
     versioned, latest = versioned_paths(base_dir, dataset_id, version)
-    fs = FS(df.sparkSession, versioned)
+    spark = df.sparkSession
+    fs = FS(spark, versioned)
     if fs.exists(versioned):
         return None
-    write_parquet(df, versioned, single_file=True)
-    if fs.exists(latest):
-        fs.delete(latest)
-    fs.copy(versioned, latest)
+    staged = write_parquet(df, hidden(versioned), single_file=True)
+    commit_single_file(spark, latest, lambda tmp: fs.copy(staged, f"{tmp}/part-0"))
+    fs.replace(staged, versioned)
     return versioned, latest
 
 

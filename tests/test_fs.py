@@ -12,7 +12,7 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from dwca_parquet_spark.fs import FS, parent, to_local
+from dwca_parquet_spark.fs import FS, hidden, to_local
 from dwca_parquet_spark.sinks.csv import read_csv, write_csv
 from dwca_parquet_spark.sinks.jsonarray import write_json_array
 from dwca_parquet_spark.sinks.parquet import write_parquet, write_versioned
@@ -24,9 +24,10 @@ def _df(spark):
     )
 
 
-def test_parent_and_to_local():
-    assert parent("s3a://bucket/a/b.parquet") == "s3a://bucket/a"
-    assert parent("/x/y/z.parquet") == "/x/y"
+def test_hidden_and_to_local():
+    assert hidden("s3a://bucket/a/b.parquet", ".tmp") == "s3a://bucket/a/.b.parquet.tmp"
+    assert hidden("file:/x/y/z.json") == "file:/x/y/.z.json"
+    assert hidden("/x/y/") == "/x/.y"
     assert to_local("/x/y") == Path("/x/y")
     assert to_local("file:///x/y") == Path("/x/y")
     assert to_local("s3a://bucket/x") is None
@@ -290,3 +291,19 @@ def test_sinks_write_zstd(spark, tmp_path):
     write_jsonl(df, tmp_path / "jsonl")
     parts = sorted(p.name for p in (tmp_path / "jsonl").glob("part-*"))
     assert parts and all(n.endswith(".json.gz") for n in parts), parts
+
+
+def test_only_fs_touches_the_hadoop_handles():
+    """``fs.py`` is the one owner of how a path is written, moved or
+    replaced: no other module reaches into ``FS._fs`` or ``FS._jpath``."""
+    import ast
+
+    pkg = Path(__file__).resolve().parents[1] / "dwca_parquet_spark"
+    reach = []
+    for py in sorted(pkg.rglob("*.py")):
+        if py == pkg / "fs.py":
+            continue
+        for node in ast.walk(ast.parse(py.read_text(), str(py))):
+            if isinstance(node, ast.Attribute) and node.attr in ("_fs", "_jpath"):
+                reach.append(f"{py.relative_to(pkg)}:{node.lineno} .{node.attr}")
+    assert reach == []

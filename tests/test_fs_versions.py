@@ -1,9 +1,12 @@
 """The versioned-state helpers in ``dwca_parquet_spark.fs`` — the one
 owner of the ``v<N>`` watermark / staged commit / prune rules and the
-committed-vs-orphan segment split that every incremental fold relies on.
+committed-vs-orphan segment split that every incremental fold relies on,
+and the one publish step (``commit_single_file`` / ``FS.replace``) by
+which every published file replaces its predecessor.
 
-Filesystem only: the ``write`` callbacks create plain files, so no Spark
-job runs (the session is used for its Hadoop FileSystem)."""
+Mostly filesystem only: most ``write`` callbacks create plain files, so
+no Spark job runs (the session is used for its Hadoop FileSystem); the
+checksum cases write a tiny parquet file with Spark."""
 
 from __future__ import annotations
 
@@ -11,7 +14,9 @@ from pathlib import Path
 
 import pytest
 
+from dwca_parquet_spark import fs as fs_module
 from dwca_parquet_spark.fs import (
+    FS,
     commit_single_file,
     commit_version,
     latest_version,
@@ -107,8 +112,23 @@ def test_split_segments_by_watermark(spark, tmp_path):
     assert committed == [] and len(orphans) == 4
 
 
-def test_commit_single_file_replaces_target(spark, tmp_path):
+def _spy_writes(monkeypatch) -> list[tuple[str, tuple[str, ...]]]:
+    """Record every ``FS`` call that deletes, moves or writes a path."""
+    calls: list[tuple[str, tuple[str, ...]]] = []
+    for name in ("delete", "rename", "copy", "copy_from_local", "write_bytes"):
+        original = getattr(FS, name)
+
+        def spy(self, *args, _original=original, _name=name):
+            calls.append((_name, tuple(str(a) for a in args)))
+            return _original(self, *args)
+
+        monkeypatch.setattr(FS, name, spy)
+    return calls
+
+
+def test_commit_single_file_replaces_target(spark, tmp_path, monkeypatch):
     out = tmp_path / "sub" / "out.csv"
+    calls = _spy_writes(monkeypatch)
 
     def one_part(body: str):
         def write(tmp: str) -> None:
@@ -132,3 +152,69 @@ def test_commit_single_file_replaces_target(spark, tmp_path):
     with pytest.raises(IOError, match="expected one part file"):
         commit_single_file(spark, str(out), two_parts)
     assert out.read_text() == "b"
+
+    # A Hadoop-written file carries a .crc; the replace must leave the new
+    # bytes' .crc beside them, or a checksummed read of them fails.
+    pq = tmp_path / "sub" / "out.parquet"
+    for n in (3, 40):
+        commit_single_file(
+            spark,
+            str(pq),
+            lambda tmp: spark.range(n).coalesce(1).write.parquet(tmp),
+        )
+        assert spark.read.parquet(str(pq)).count() == n
+    # (``.out.csv.tmp`` is the refused two-part publish's hidden residue)
+    assert _names(pq.parent) == [
+        ".out.csv.tmp", ".out.parquet.crc", "out.csv", "out.parquet"
+    ]
+
+    # the published paths are only ever replaced, never deleted or written
+    touched = [c for c in calls if {str(out), str(pq)} & set(c[1])]
+    assert touched == []
+
+
+def test_commit_single_file_crash_leaves_target_and_hidden_residue(
+    spark, tmp_path
+):
+    out = tmp_path / "out.json"
+
+    def body(text: str):
+        def write(tmp: str) -> None:
+            Path(tmp).mkdir(parents=True, exist_ok=True)
+            (Path(tmp) / "part-0").write_text(text)
+
+        return write
+
+    commit_single_file(spark, str(out), body("old"))
+
+    def crash(tmp: str) -> None:
+        body("half")(tmp)
+        raise RuntimeError("killed mid-write")
+
+    with pytest.raises(RuntimeError):
+        commit_single_file(spark, str(out), crash)
+    assert out.read_text() == "old"
+    assert [n for n in _names(tmp_path) if not n.startswith((".", "_"))] == [
+        "out.json"
+    ]
+    assert ".out.json.tmp" in _names(tmp_path)  # hidden residue
+
+    # the next publish clears the residue, and its own part is the one read
+    commit_single_file(spark, str(out), body("new"))
+    assert out.read_text() == "new"
+    assert _names(tmp_path) == ["out.json"]
+
+
+def test_replace_overwrite_branch(spark, tmp_path, monkeypatch):
+    """The non-local replace (``FileContext.rename`` with ``OVERWRITE``,
+    atomic on HDFS), driven on the local filesystem."""
+    monkeypatch.setattr(fs_module, "_LOCAL_FS", "java.lang.String")
+    src, dst = tmp_path / "src.parquet", tmp_path / "dst.parquet"
+    spark.range(5).coalesce(1).write.parquet(str(tmp_path / "a"))
+    spark.range(50).coalesce(1).write.parquet(str(tmp_path / "b"))
+    fs = FS(spark, str(tmp_path))
+    fs.rename(fs.glob(f"{tmp_path}/a/part-*")[0], str(dst))
+    fs.rename(fs.glob(f"{tmp_path}/b/part-*")[0], str(src))
+    fs.replace(str(src), str(dst))
+    assert not src.exists()
+    assert spark.read.parquet(str(dst)).count() == 50

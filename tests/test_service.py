@@ -9,8 +9,10 @@ from pathlib import Path
 
 import pytest
 
+from dwca_parquet_spark.fs import FS
 from dwca_parquet_spark.plans.csw import CatalogConfig
 from dwca_parquet_spark.service import (
+    Job,
     JobQueue,
     ResourceService,
     ServiceConfig,
@@ -217,3 +219,178 @@ def test_http_skin_end_to_end(svc, spark):
         assert e404b.value.code == 404
     finally:
         httpd.shutdown()
+
+
+def _visible(d: Path) -> set[str]:
+    """Names in ``d`` that Spark's and Hadoop's listings do not skip."""
+    return {p.name for p in d.iterdir() if not p.name.startswith((".", "_"))}
+
+
+def _fail_once(monkeypatch, owner, name, when=lambda *args: True):
+    """Make ``owner.name`` raise on its first call for which ``when(*args)``
+    holds; every other call runs the original."""
+    original = getattr(owner, name)
+    fired = []
+
+    def wrapper(*args, **kw):
+        if not fired and when(*args):
+            fired.append(args)
+            raise RuntimeError(f"injected crash in {name}")
+        return original(*args, **kw)
+
+    monkeypatch.setattr(owner, name, wrapper)
+    return fired
+
+
+def _convert(svc) -> Job:
+    svc.get_resource("birds")
+    return svc.jobs.jobs[-1].wait(120)
+
+
+def _assert_published(svc, spark) -> None:
+    resources = Path(svc.cfg.resources_base)
+    versioned = resources / "birds" / "v1.7.parquet"
+    latest = resources / "birds.parquet"
+    assert versioned.read_bytes() == latest.read_bytes()
+    assert spark.read.parquet(str(latest)).count() == len(FX.core_rows())
+    assert _visible(resources / "birds") == {"v1.7.parquet"}
+    assert _visible(resources) == {"birds", "birds.parquet"}
+
+
+def test_crash_in_alias_copy_is_redone_on_repeat(svc, spark, monkeypatch):
+    """A crash inside the latest alias copy leaves no versioned file, so the
+    repeat converts again instead of skipping with the alias missing."""
+    fired = _fail_once(monkeypatch, FS, "copy")
+    job = _convert(svc)
+    assert fired and job.status == "failed" and "injected crash" in job.error
+    resources = Path(svc.cfg.resources_base)
+    assert _visible(resources / "birds") == set()
+    assert _visible(resources) == {"birds"}
+
+    repeat = _convert(svc)
+    assert repeat.status == "done", repeat.error
+    assert repeat.result is not None
+    _assert_published(svc, spark)
+
+
+def test_crash_before_versioned_commit_is_redone_on_repeat(
+    svc, spark, monkeypatch
+):
+    """The versioned file is the commit point: a crash just before its
+    rename (alias already published) is redone by the repeat."""
+    fired = _fail_once(
+        monkeypatch, FS, "replace",
+        when=lambda self, src, dst: str(dst).endswith("/birds/v1.7.parquet"),
+    )
+    job = _convert(svc)
+    assert fired and job.status == "failed" and "injected crash" in job.error
+    resources = Path(svc.cfg.resources_base)
+    assert _visible(resources / "birds") == set()
+    assert (resources / "birds.parquet").is_file()
+
+    repeat = _convert(svc)
+    assert repeat.status == "done", repeat.error
+    assert repeat.result is not None
+    _assert_published(svc, spark)
+    # published, so the next repeat is the one-probe skip again
+    assert _convert(svc).result is None
+
+
+def test_crash_in_geoapi_write_keeps_previous_file(svc, monkeypatch):
+    """A crash part-way through the geoapi JSON write leaves the published
+    array byte-identical and no visible residue; the next run publishes."""
+    out = Path(svc.generate_geoapi()["result"])
+    svc.jobs.join(180)
+    before = out.read_bytes()
+
+    original = FS.write_bytes
+
+    def half_then_crash(self, p, data):
+        original(self, p, data[: len(data) // 2])
+        raise RuntimeError("injected crash in write_bytes")
+
+    monkeypatch.setattr(FS, "write_bytes", half_then_crash)
+    svc.generate_geoapi()
+    job = svc.jobs.jobs[-1].wait(180)
+    assert job.status == "failed" and "injected crash" in job.error
+    assert out.read_bytes() == before
+    assert _visible(out.parent) == {out.name}
+
+    monkeypatch.setattr(FS, "write_bytes", original)
+    svc.generate_geoapi()
+    assert svc.jobs.jobs[-1].wait(180).status == "done"
+    assert out.read_bytes() == before
+    assert sorted(p.name for p in out.parent.iterdir()) == [
+        f".{out.name}.crc", out.name
+    ]
+
+
+def test_crash_in_csw_write_keeps_previous_file(svc, spark, monkeypatch):
+    """A crash inside the CSW table's Spark write (after its part file
+    landed) leaves the published table byte-identical; the residue is
+    hidden, never read as the table, and cleared by the next publish."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    out = Path(svc.generate_csw()["result"])
+    svc.jobs.join(180)
+    before = out.read_bytes()
+
+    original = DataFrameWriter.parquet
+
+    def write_then_crash(self, path, *args, **kw):
+        original(self, path, *args, **kw)
+        raise RuntimeError("injected crash in the CSW write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_crash)
+    svc.generate_csw()
+    job = svc.jobs.jobs[-1].wait(180)
+    assert job.status == "failed" and "injected crash" in job.error
+    monkeypatch.setattr(DataFrameWriter, "parquet", original)
+    assert out.read_bytes() == before
+    assert _visible(out.parent) == {out.name}
+    # reading the directory skips the hidden residue: only the table
+    assert spark.read.parquet(str(out.parent)).count() == 2
+
+    svc.generate_csw()
+    assert svc.jobs.jobs[-1].wait(180).status == "done"
+    assert sorted(p.name for p in out.parent.iterdir()) == [
+        f".{out.name}.crc", out.name
+    ]
+    assert spark.read.parquet(str(out)).count() == 2
+
+
+@pytest.mark.parametrize("rid", ["..", "a/b", "birds&v=9", "", "%2e%2e"])
+def test_get_resource_rejects_bad_ids(svc, tmp_path, rid):
+    """An id outside the IPT shortname form is refused before it reaches an
+    IPT URL or a store path."""
+    fetched: list[str] = []
+    fetch = svc.client.fetch
+    svc.client.fetch = lambda url: fetched.append(url) or fetch(url)
+    with pytest.raises(ValueError, match="invalid resource id"):
+        svc.get_resource(rid)
+    assert fetched == [] and svc.jobs.jobs == []
+    assert not (tmp_path / "store").exists()
+
+
+def test_http_bad_resource_id_is_400(svc, tmp_path):
+    import urllib.error
+    import urllib.request
+
+    from dwca_parquet_spark.httpd import serve
+
+    fetched: list[str] = []
+    fetch = svc.client.fetch
+    svc.client.fetch = lambda url: fetched.append(url) or fetch(url)
+    httpd = serve(svc)
+    host, port = httpd.server_address
+    try:
+        with pytest.raises(urllib.error.HTTPError) as e400:
+            urllib.request.urlopen(
+                f"http://{host}:{port}/api/v1/resources/%2e%2e", timeout=30
+            )
+        assert e400.value.code == 400
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+    assert fetched == [] and svc.jobs.jobs == []
+    assert not (tmp_path / "store").exists()
