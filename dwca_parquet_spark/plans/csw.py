@@ -2,10 +2,19 @@
 
 The reference harvests every IPT dataset, imports its EML, renders an
 ISO19139 XML document, and builds one flat pycsw-shaped record per dataset;
-the records table is written as zstd parquet. Row construction there is
-pure Python; here the *per-record field derivations* are DataFrame
-expressions (SURVEY §2.D mapping), so the same pipeline scales past
-driver-memory catalogs:
+the records table is written as zstd parquet. It does all of that again on
+every request. Here the harvest is ``IptClient.harvest``, shared with the
+geoapi pipeline: it fetches the RSS, then fetches and parses only the EMLs
+whose RSS version moved (or that carry none), and keeps each parsed EML
+with its version for the next pass. The ISO19139 ``xml`` and its
+``anytext`` depend on the EML alone, so they are kept on that same entry
+and rendered once per version; only ``title`` is taken from the current
+RSS on every pass. The state lives in the process, so the first job after
+a restart pays the full harvest. The harvested rows reach Spark as one
+``pyarrow.Table`` typed from ``HARVEST_SCHEMA`` (``rows_to_frame``): no
+Python worker and no pickling. The *per-record field derivations* are
+DataFrame expressions (SURVEY §2.D mapping), so the same pipeline scales
+past driver-memory catalogs:
 
 - D7/D8  keyword flatten + dedup + join  → flatten / array_distinct / array_join
 - D9     bbox → WKT polygon              → format_string (shapely.box vertex order)
@@ -28,8 +37,10 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -139,16 +150,29 @@ HARVEST_SCHEMA = StructType(
 )
 
 
-def harvest_rows(client: IptClient) -> list[dict]:
-    """Driver-side harvest loop (metadata-sized by construction): RSS list →
-    per-dataset EML fetch + parse + ISO render (reference ``csw.py:44-49``)."""
-    from dwca_parquet_spark.sources.ipt import parse_eml
+def rows_to_frame(
+    spark: SparkSession, rows: list[dict], schema: StructType
+) -> DataFrame:
+    """Driver rows → DataFrame through one Arrow table typed from the Spark
+    ``schema``, so the schema stays the one owner of the column types.
+    ``createDataFrame`` takes a ``pyarrow.Table`` on the JVM's Arrow reader
+    whatever ``spark.sql.execution.arrow.pyspark.enabled`` says; a
+    ``list[dict]`` would be pickled through a Python worker instead."""
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
+
+def harvest_rows(client: IptClient) -> list[dict]:
+    """One record row per dataset of ``client.harvest()`` (reference
+    ``csw.py:44-49``). The ISO render and its ``anytext`` are made once per
+    EML version and kept on the harvest's entry."""
     rows = []
-    for ds in client.datasets():
-        metadata = parse_eml(client.eml(ds["id"]))
+    for ds, eml in client.harvest():
+        metadata = eml.metadata
+        if "xml" not in eml.derived:
+            xml = iso19139_xml(metadata)
+            eml.derived.update(xml=xml, anytext=anytext_from_xml(xml))
         idf = metadata["identification"]
-        xml = iso19139_xml(metadata)
         spatial = idf["extents"]["spatial"]
         rows.append(
             {
@@ -162,8 +186,8 @@ def harvest_rows(client: IptClient) -> list[dict]:
                     grp["keywords"] for grp in idf["keywords"].values()
                 ],
                 "contacts": [c["individualname"] for c in metadata["contact"].values()],
-                "xml": xml,
-                "anytext": anytext_from_xml(xml),
+                "xml": eml.derived["xml"],
+                "anytext": eml.derived["anytext"],
             }
         )
     return rows
@@ -189,7 +213,7 @@ def eml_to_csw_records(
     """Harvested rows → the reference's 21-column CSW record table
     (``csw.py:77-101``), all derivations as DataFrame expressions."""
     cfg = cfg or CatalogConfig()
-    raw = spark.createDataFrame(harvested, HARVEST_SCHEMA)
+    raw = rows_to_frame(spark, harvested, HARVEST_SCHEMA)
 
     keywords = F.array_join(
         F.array_distinct(F.flatten(F.col("keyword_groups"))), ", "

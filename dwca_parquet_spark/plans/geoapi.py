@@ -11,6 +11,15 @@ ARRAY true) via sinks.jsonarray.
 Like the reference, keyword dedup uses set semantics — here
 ``array_distinct`` (first-occurrence order, deterministic; the reference's
 Python ``set()`` order is not).
+
+The reference re-harvests the whole IPT catalog per request. Here the rows
+come from ``IptClient.harvest``, the one harvest loop shared with the CSW
+pipeline, which fetches and parses an EML only when its RSS version moved
+(or is absent) and keeps the parsed EML per dataset in between; ``title``
+is read from the current RSS on every pass. The state lives in the
+process, so the first job after a restart fetches every EML. The rows reach
+Spark as one ``pyarrow.Table`` typed from ``GEOAPI_HARVEST_SCHEMA``
+(``plans.csw.rows_to_frame``), not pickled through a Python worker.
 """
 
 from __future__ import annotations
@@ -26,8 +35,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from dwca_parquet_spark.plans.csw import CatalogConfig
-from dwca_parquet_spark.sources.ipt import IptClient, parse_eml
+from dwca_parquet_spark.plans.csw import CatalogConfig, rows_to_frame
+# ``parse_eml`` is unused here but stays importable as
+# ``plans.geoapi.parse_eml``: perfbench/tracing.py wraps it on this module
+# too. The harvest calls it through ``sources.ipt``.
+from dwca_parquet_spark.sources.ipt import IptClient, parse_eml  # noqa: F401
 
 GEOAPI_HARVEST_SCHEMA = StructType(
     [
@@ -42,11 +54,11 @@ GEOAPI_HARVEST_SCHEMA = StructType(
 
 
 def harvest_geoapi_rows(client: IptClient) -> list[dict]:
-    """Driver-side harvest (reference ``geoapi.py:24-38``)."""
+    """One config row per dataset of ``client.harvest()`` (reference
+    ``geoapi.py:24-38``)."""
     rows = []
-    for ds in client.datasets():
-        metadata = parse_eml(client.eml(ds["id"]))
-        idf = metadata["identification"]
+    for ds, eml in client.harvest():
+        idf = eml.metadata["identification"]
         spatial = idf["extents"]["spatial"]
         rows.append(
             {
@@ -71,7 +83,7 @@ def ipt_to_pygeoapi_resources(
     """Harvested rows → nested pygeoapi collection configs
     (reference ``geoapi.py:40-65``)."""
     cfg = cfg or CatalogConfig()
-    raw = spark.createDataFrame(harvested, GEOAPI_HARVEST_SCHEMA)
+    raw = rows_to_frame(spark, harvested, GEOAPI_HARVEST_SCHEMA)
 
     host = cfg.ipt_url.replace("https://", "")
     source = F.concat(

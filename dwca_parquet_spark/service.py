@@ -29,6 +29,14 @@ Jobs:
   → parquet at ``cfg.csw_output``.
 - ``job_geoapi`` ⇔ ``libs/geoapi.py:68-75``: harvest → pygeoapi configs →
   single JSON-array file at ``cfg.geoapi_output``.
+
+  Both catalog jobs harvest through the one ``IptClient.harvest``, which
+  keeps each dataset's parsed EML (and CSW's ISO render) with its RSS
+  version: a job fetches the RSS and then only the EMLs whose version
+  moved or is absent, where the reference fetches every EML per request.
+  The state lives in the client, so the first catalog job after a restart
+  pays the full harvest. The harvested rows reach Spark as one Arrow
+  table (``plans.csw.rows_to_frame``), not pickled through a Python worker.
 """
 
 from __future__ import annotations

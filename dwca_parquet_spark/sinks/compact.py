@@ -10,10 +10,13 @@ Shape: size the output from the ACTUAL byte total (one FS listing, no
 data read), then ``coalesce(n_out)`` — a shuffle-FREE narrow merge of
 input splits into fewer write tasks (repartition would shuffle every
 byte; compaction's job is IO, not balance).
-The swap is write-to-temp → rename-away → rename-in → delete, the same
-staged-rename discipline as sinks/parquet.py's single-file writer; a
-reader never observes a half-written directory (rename is atomic per FS
-contract on HDFS/local; on S3A the window is the two renames).
+The swap is write-to-temp → rename-away → rename-in → delete; a reader
+never observes a half-written directory (rename is atomic per FS contract
+on HDFS/local; on S3A the window is the two renames). Between the two
+renames the table is missing and lives only at ``{path}.compact-old``: an
+interrupt there is rolled back, and a process that died there is repaired
+by the next call, which renames ``.compact-old`` back before anything
+else.
 """
 
 from __future__ import annotations
@@ -54,13 +57,15 @@ def compact_parquet(
     codec is not zstd the byte total shifts and one extra pass may run
     before the table is stable — harmless, and it converges because the
     codec no longer changes. Returns the plan plus ``acted``."""
+    base = str(path).rstrip("/")
+    tmp, old = base + ".compact-tmp", base + ".compact-old"
+    fs = FS(spark, base)
+    if not fs.exists(base) and fs.exists(old):
+        fs.rename(old, base)  # a predecessor died between its two renames
     plan = compaction_plan(spark, path, target_bytes)
     if plan["n_files"] <= 2 * plan["n_out"]:
         plan["acted"] = False
         return plan
-    base = str(path).rstrip("/")
-    tmp, old = base + ".compact-tmp", base + ".compact-old"
-    fs = FS(spark, base)
     for stale in (tmp, old):  # crashed predecessor leftovers
         if fs.exists(stale):
             fs.delete(stale)
@@ -74,7 +79,7 @@ def compact_parquet(
     fs.rename(base, old)
     try:
         fs.rename(tmp, base)
-    except Exception:
+    except BaseException:
         fs.rename(old, base)  # roll back; leave tmp for inspection
         raise
     fs.delete(old)

@@ -19,9 +19,16 @@ the reference pipelines (``libs/csw.py:46-60``): ``metadata.identifier``,
 keywords}``, ``contact.{role: {individualname}}`` — only the fields the
 pipelines consume.
 
-Scale note: harvesting is metadata-sized (one RSS doc + one EML per
-dataset) and stays on the driver, exactly like the reference; the *bulk*
-data path is the DwC-A archives those datasets point at.
+Scale note: harvesting is metadata-sized and stays on the driver, like
+the reference; the *bulk* data path is the DwC-A archives those datasets
+point at. Unlike the reference, which fetches and parses every dataset's
+EML on every catalog request, ``IptClient.harvest`` is the one harvest
+loop and keeps each dataset's parsed EML with the RSS version it was
+parsed at: a pass fetches the RSS, then only the EMLs whose version moved
+or that carry no version (a guid without ``/vN``). The state holds one
+entry per dataset of the latest RSS and is swapped whole at the end of a
+complete pass, so a pass that fails midway leaves it as it was. It lives
+in the process: the first harvest after a restart fetches every EML.
 """
 
 from __future__ import annotations
@@ -29,7 +36,7 @@ from __future__ import annotations
 import re
 import urllib.request
 import xml.etree.ElementTree as ET
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
 Fetch = Callable[[str], bytes]
@@ -43,13 +50,51 @@ def _default_fetch(url: str) -> bytes:
 
 
 @dataclass
+class ParsedEml:
+    """One dataset's parsed EML at the RSS ``version`` it was fetched at.
+
+    ``derived`` holds what a consumer computes from ``metadata`` alone
+    (the CSW pipeline keeps its ISO19139 ``xml``/``anytext`` there); it is
+    valid for as long as the entry is, and goes with it."""
+
+    version: str
+    metadata: dict
+    derived: dict = field(default_factory=dict)
+
+
+@dataclass
 class IptClient:
     ipt_url: str
     fetch: Fetch = field(default=_default_fetch)
+    # resource id → its parsed EML, for the datasets of the last complete
+    # harvest; replaced whole by the next one
+    _emls: dict[str, ParsedEml] = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
 
     def datasets(self) -> list[dict]:
         """RSS → one dict per dataset: id, version, title, link, guid."""
         return parse_rss(self.fetch(f"{self.ipt_url}/rss"))
+
+    def harvest(self) -> Iterator[tuple[dict, ParsedEml]]:
+        """``(dataset, parsed EML)`` per RSS item, in RSS order.
+
+        The EML is fetched and parsed only when the dataset is new, its
+        version moved, or its version is ``""``; otherwise the entry of the
+        last complete harvest is reused. Exhausting the iterator replaces
+        the state with this pass's entries, so a dataset dropped from the
+        RSS leaves it and a pass that raises or stops early changes
+        nothing. Passes on several threads each build their own map and
+        the last to finish wins; an entry is only ever reused at the
+        version it was parsed at, so none can serve a stale EML."""
+        previous, current = self._emls, {}
+        for ds in self.datasets():
+            entry = previous.get(ds["id"])
+            if entry is None or not ds["version"] or entry.version != ds["version"]:
+                entry = ParsedEml(ds["version"], parse_eml(self.eml(ds["id"])))
+            current[ds["id"]] = entry
+            yield ds, entry
+        self._emls = current
 
     def eml(self, resource_id: str) -> bytes:
         return self.fetch(f"{self.ipt_url}/eml.do?r={resource_id}")
